@@ -1,14 +1,11 @@
-"""Round-6 optimization probes — stage isolation for the heavy benched
-queries (guide §1.4: noop-sink isolation; bench.py itself is FROZEN for
-measurement, so every extra probe lives here).
+"""Per-query noop probes and a profiling-scale table builder (noop-sink
+isolation; bench.py itself is FROZEN for measurement, so extra probes
+live here).  Stage splits of minhash_pairs (signatures / candidates /
+pairs) and of the ship pipeline (scan / parse / enrich / spec / route)
+come from ``python3 perfbench/run.py --trace 1``.
 
 Modes (pass as argv[1]):
 
-* ``minhash``   — stage breakdown of minhash_pairs: signature pass alone,
-  candidates, full pipeline (counts how much the repeated-subtree
-  recompute costs).
-* ``e2e``       — pipeline_e2e stage breakdown at the bench's sf: scan+
-  parse noop, +enrich+route noop, full fan-out write.
 * ``perq``      — best-of-N noop walls for a named query list (argv[2:]),
   at $SPARK_GRAFT_SF_DIR.
 * ``scale``     — build a scaled documents/events profiling dir (argv[2] =
@@ -25,7 +22,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
@@ -59,73 +55,6 @@ def best_of(fn, n=2, label="", spark=None):
                       "walls": [w for w, _ in walls],
                       "steal_pct": [s for _, s in walls]}))
     return best
-
-
-def mode_minhash() -> None:
-    import pyspark.sql.functions as F
-
-    from logshipper_spark.functions import dedup
-
-    spark = make_session()
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    n = docs.count()
-    print(json.dumps({"probe": "docs", "rows": n}))
-    # stage 1: the Arrow signature pass alone
-    best_of(lambda: noop(dedup.minhash_signatures_pandas(docs)), 2,
-            "minhash: signatures only", spark)
-    # stage 2: candidate pairs (LSH banding + bucket-cap joins)
-    best_of(lambda: noop(dedup.minhash_candidates(docs)), 2,
-            "minhash: candidates", spark)
-    # stage 3: the full benched pipeline
-    best_of(lambda: noop(dedup.minhash_dedup_pairs(docs, threshold=0.5)), 2,
-            "minhash: full pipeline", spark)
-    spark.stop()
-
-
-def mode_e2e() -> None:
-    from bench import n_convs_for, prepare_transcripts, sf_of
-
-    import pyspark.sql.functions as F
-
-    from logshipper_spark.operators.enrich import enrich
-    from logshipper_spark.operators.parse import grok_native
-    from logshipper_spark.operators.route import write_fanout_explode
-    from logshipper_spark.plans.spec import compile_pipeline
-    from logshipper_spark.sources.transcripts import role_dim, tool_dim
-
-    sf = sf_of(SF_DIR)
-    spark = make_session()
-    work = tempfile.mkdtemp(prefix="lss_r6_e2e_", dir="/dev/shm")
-    tpath = os.path.join(work, "transcripts")
-    n = prepare_transcripts(spark, sf, tpath)
-    print(json.dumps({"probe": "turns", "rows": n}))
-    t = spark.read.parquet(tpath)
-    pipe = compile_pipeline([
-        {"match": {"text": "^ERROR "}, "forward": ["errors"]},
-        {"match": {"text": "^<"}, "forward": ["syslog"]},
-        {"match": {"text": "^DEBUG "}, "drop": True},
-        {"forward": ["archive"]},
-    ])
-
-    def parsed():
-        return grok_native(t)
-
-    def routed():
-        enr = enrich(enrich(parsed(), role_dim(spark), on="role"),
-                     tool_dim(spark), on="tool")
-        return pipe.routed(enr)
-
-    best_of(lambda: noop(t), 2, "e2e: scan only", spark)
-    best_of(lambda: noop(parsed()), 2, "e2e: scan+parse", spark)
-    best_of(lambda: noop(routed()), 2, "e2e: scan+parse+enrich+route", spark)
-    nb = max(4, min(64, n // 25_000))
-    best_of(lambda: write_fanout_explode(routed(), os.path.join(work, "out"),
-                                         n_buckets=nb), 2,
-            "e2e: full fanout write", spark)
-    import shutil
-
-    shutil.rmtree(work, ignore_errors=True)
-    spark.stop()
 
 
 def mode_perq(names: list[str]) -> None:
@@ -183,11 +112,7 @@ def mode_scale(mult: int) -> None:
 
 if __name__ == "__main__":
     mode = sys.argv[1] if len(sys.argv) > 1 else "perq"
-    if mode == "minhash":
-        mode_minhash()
-    elif mode == "e2e":
-        mode_e2e()
-    elif mode == "scale":
+    if mode == "scale":
         mode_scale(int(sys.argv[2]) if len(sys.argv) > 2 else 10)
     else:
         mode_perq(sys.argv[2:])

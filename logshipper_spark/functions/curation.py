@@ -179,7 +179,7 @@ class IncrementalCurator:
 
     def _grams(self, d: DataFrame) -> DataFrame:
         # Arrow kernel — the expression form pays a ~20x interpreted-HOF
-        # recompute penalty (textstats.ngram_array_expr docstring)
+        # recompute penalty (textstats.ngram_array_pandas docstring)
         from logshipper_spark.functions.textstats import ngram_array_pandas
 
         g = ngram_array_pandas(self.ngram)(F.col(self.text_col))

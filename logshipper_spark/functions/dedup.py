@@ -13,8 +13,9 @@ Four tiers, increasing fuzziness, each designed around its shuffle shape:
   near-dups share the fingerprint (or a rotated band of it).
 * **n-gram Jaccard**   — exact verification metric over candidate pairs.
 
-All hashing is xxhash64-based (JVM, codegen); shingling uses built-in
-``F.transform``/``F.slice`` over a token array — no Python in the hot path.
+MinHash signatures and Jaccard grams come from Arrow-batched numpy/Python
+kernels (interpreted higher-order-function lambdas cost ~20x more); exact
+and SimHash hashing stay JVM-side (xxhash64/md5, codegen).
 """
 
 from __future__ import annotations
@@ -47,66 +48,7 @@ def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     return df.join(keep, on=id_col, how="left_semi")
 
 
-# ------------------------------------------------------------- shingles --
-def _shingles(text_col: Column, k: int = 3) -> Column:
-    """k-token shingles as an array of strings (lowercased words)."""
-    toks = F.split(F.lower(F.regexp_replace(text_col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
-    toks = F.filter(toks, lambda t: t != "")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(1), F.greatest(n - (k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
-
-
-def ngram_set(text_col: Column, k: int = 3) -> Column:
-    return F.array_distinct(_shingles(text_col, k))
-
-
 # -------------------------------------------------------------- minhash --
-def minhash_signature(text_col: Column, num_hashes: int = 32, k: int = 3,
-                      seed: int = 7) -> Column:
-    """K minhash values in ONE pass over the shingle set — the composable
-    Column form.
-
-    NOTE: higher-order-function lambdas are interpreted (not codegen'd), so
-    this costs ~ms per row.  The scale path is ``minhash_signatures`` below
-    (explode + codegen hash-aggregate, ~20x faster, measured); this form is
-    kept for inline/streaming use where a groupBy is awkward.
-    """
-    sh = ngram_set(text_col, k)
-    init = F.array_repeat(F.lit(2**63 - 1).cast("long"), num_hashes)
-    idx = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    return F.aggregate(
-        sh,
-        init,
-        lambda acc, s: F.zip_with(acc, idx, lambda a, i: F.least(a, F.xxhash64(s, i + seed))),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    k: int = 3,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, sig: array<bigint>) via explode + hash aggregate.
-
-    Shingling runs ONCE per doc in the Generate; the K ``min(xxhash64)``
-    aggregates are whole-stage-codegen'd with map-side partial aggregation,
-    so the shuffle carries one (id, K longs) row per doc.
-    """
-    sh = df.select(
-        F.col(id_col).alias("id"), F.explode(ngram_set(F.col(text_col), k)).alias("s")
-    )
-    aggs = [
-        F.min(F.xxhash64(F.col("s"), F.lit(i + seed))).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    return sh.groupBy("id").agg(*aggs).select(
-        "id", F.array(*[F.col(f"h{i}") for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def minhash_signatures_pandas(
     df: DataFrame,
     text_col: str = "text",
@@ -115,8 +57,9 @@ def minhash_signatures_pandas(
     k: int = 3,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, sig) via ONE Arrow-batched numpy pass — the fastest signature
-    path (~20x over interpreted higher-order functions, measured).
+    """(id, sig) via ONE Arrow-batched numpy pass — the signature path of
+    ``minhash_candidates`` (~20x over interpreted higher-order functions,
+    measured).
 
     Per batch: regex-tokenize, k-gram shingle, crc32 base hash, then the
     whole K-signature as one universal-hash broadcast
@@ -162,7 +105,6 @@ def minhash_candidates(
     num_hashes: int = 32,
     bands: int = 8,
     k: int = 3,
-    strategy: str = "pandas",
     bucket_cap: int = 1000,
     seed: int = 7,
 ) -> DataFrame:
@@ -170,9 +112,8 @@ def minhash_candidates(
     candidate pairs.  Plan shape: narrow signature compute → explode to
     B rows/doc → ONE shuffle on the band hash → per-bucket self-join.
 
-    ``strategy``: 'pandas' (numpy batch, fastest) or 'jvm' (explode +
-    codegen aggregate, zero Python).  Returns (id_a, id_b), id_a < id_b,
-    distinct.
+    Signatures come from ``minhash_signatures_pandas``.  Returns
+    (id_a, id_b), id_a < id_b, distinct.
 
     ``bucket_cap`` — the degenerate-bucket guard: a bucket holding n docs
     produces n(n-1)/2 pairs inside ONE task, so a boilerplate/empty-doc
@@ -187,8 +128,7 @@ def minhash_candidates(
     Set ``bucket_cap=0`` to disable.
     """
     rows_per_band = num_hashes // bands
-    sig_fn = minhash_signatures_pandas if strategy == "pandas" else minhash_signatures
-    sig = sig_fn(df, text_col, id_col, num_hashes, k, seed)
+    sig = minhash_signatures_pandas(df, text_col, id_col, num_hashes, k, seed)
     banded = sig.select(
         "id",
         F.posexplode(
@@ -267,13 +207,13 @@ def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
     # r6 verify-stage rework (guide §4.1/§2.3), two changes vs the
     # join-text-then-shingle-per-pair form, output-identical:
     #
-    # 1. Grams come from the Arrow kernel, not the interpreted-HOF
-    #    ngram_set: the transform lambda re-evaluates the tokenize
-    #    subexpression PER ELEMENT (tokens × grams evals per text;
-    #    measured 1.6 s of a 1.85 s verify for 256 pairs at sf0.1).
-    #    Identical output (textstats.ngram_array_pandas: differentially
-    #    tested, ASCII-pinned regex mirrors Java semantics), and jaccard
-    #    only consumes set sizes, so gram order can't matter either.
+    # 1. Grams come from the Arrow kernel, not an interpreted-HOF
+    #    transform: that lambda re-evaluates the tokenize subexpression
+    #    PER ELEMENT (tokens × grams evals per text; measured 1.6 s of a
+    #    1.85 s verify for 256 pairs at sf0.1).  The kernel is tested
+    #    row-for-row against the expression form, its ASCII-pinned regex
+    #    mirrors Java semantics, and jaccard only consumes set sizes, so
+    #    gram order can't matter either.
     # 2. Grams are computed ONCE PER UNIQUE CANDIDATE DOC (semi-join the
     #    pair ids into docs first, shingle, pin), then the pair joins
     #    attach the precomputed arrays.  The old shape shingled per

@@ -40,38 +40,6 @@ def embedding_norms(df: DataFrame, vec_col: str = "embedding", id_col: str = "ve
     return df.select(F.col(id_col), F.round(_norm(F.col(vec_col)), 6).alias("l2_norm"))
 
 
-def cosine_topk_pandas(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact top-k via one Arrow-batched numpy matmul per partition — the
-    scale path for the brute-force scan (higher-order-function dot products
-    are interpreted per element; numpy does the whole batch in C).
-
-    Same results as ``cosine_topk`` up to float-summation order.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    out_schema = f"{id_col} long, cosine_sim double"
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):  # np.stack([]) raises on an empty Arrow batch
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            yield pd.DataFrame({id_col: pdf[id_col], "cosine_sim": np.round(sims, 6)})
-
-    scored = df.select(id_col, vec_col).mapInPandas(run, out_schema)
-    return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
-
-
 def cosine_topk(
     df: DataFrame,
     query: list[float],
@@ -208,8 +176,9 @@ def blocked_cosine_pairs(
     crosses once per block (O(n·d)) and the n×n similarity matrix is a
     numpy matmul, strip-chunked to bound memory at ``strip``×n cells per
     step.  Kernel emits RAW cosines for candidates above
-    ``threshold − 1e-9`` (a guard band so the authoritative Spark-side
-    F.round/filter decides every boundary case); callers apply
+    ``threshold − 1e-6`` (a guard band of one rounding quantum, so the
+    authoritative Spark-side F.round/filter decides every boundary case);
+    callers apply
     ``round(…, 6) >= threshold`` — done here, so output is identical to
     the pair-join form (differentially verified, diff 0).
 

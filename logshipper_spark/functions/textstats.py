@@ -362,27 +362,14 @@ def pack_payloads(df: DataFrame, budget: int = 2048, shards: int = 16,
     )
 
 
-def ngram_array_expr(col: Column, n: int) -> Column:
-    """Distinct word n-grams as an array column — pure JVM expression form.
-
-    PERF HAZARD (measured r4): ``F.transform``'s interpreted lambda
-    re-evaluates the tokenize subexpression (regex + split + filter
-    lambda) PER ELEMENT — ~tokens × grams interpreted evals per row,
-    ~11-15 s for 5k docs at sf0.1.  Use ``ngram_array_pandas`` (0.6 s,
-    identical output, narrow) in hot paths; this form remains for
-    reference/differential testing.
-    """
-    toks = F.split(F.lower(F.regexp_replace(col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
-    toks = F.filter(toks, lambda t: t != "")
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
-
-
 def ngram_array_pandas(n: int):
     """Arrow-vectorized n-gram kernel: tokenize + slide + dedup per Arrow
-    batch in one narrow pass — no shuffle, no interpreted-lambda recompute
-    (20x vs the expression form, differentially tested equal).  ``re.ASCII``
-    matches Java regex's ASCII ``\\s`` / ``[^A-Za-z0-9\\s]`` semantics."""
+    batch in one narrow pass — no shuffle, no interpreted-lambda recompute.
+    The ``F.transform`` expression form re-evaluates the tokenize
+    subexpression PER ELEMENT (~tokens × grams interpreted evals per row,
+    measured ~20x slower); the tests keep it as the row-for-row reference.
+    ``re.ASCII`` matches Java regex's ASCII ``\\s`` / ``[^A-Za-z0-9\\s]``
+    semantics."""
     import re as _re
 
     # module-level pd import below: the deferred-annotation hints on the
@@ -395,8 +382,9 @@ def ngram_array_pandas(n: int):
         out = []
         for t in s:
             if t is None:
-                # match the expression form: split(NULL) is a NULL array,
-                # never a crash (review r6 — t.lower() raised on None)
+                # NULL in, NULL out: a NULL text yields a NULL array,
+                # never [''] and never a crash (review r6: t.lower()
+                # raised on None)
                 out.append(None)
                 continue
             # strip THEN lower, matching the JVM/oracle operation order
@@ -481,7 +469,6 @@ def contamination_check(
     id_col: str = "doc_id",
     n: int = 8,
     packed: bool = False,
-    gram_impl: str = "pandas",
 ) -> DataFrame:
     """Benchmark decontamination: training docs sharing any n-gram (n=8
     words by default) with a benchmark document.  Shape: explode both sides
@@ -495,16 +482,9 @@ def contamination_check(
     collisions (~p²/2⁶⁴) can only ADD a spurious hit, never drop one.
     ``packed=False`` keeps the raw gram string for engine-parity oracles
     (xxhash64 doesn't exist in DuckDB); tests assert both variants agree.
-    ``gram_impl="pandas"`` (default) generates grams with the Arrow kernel
-    — the expression form pays a measured ~20x interpreted-HOF recompute
-    penalty (see ``ngram_array_expr``); outputs are identical.
+    Grams come from the Arrow kernel ``ngram_array_pandas``.
     """
-    if gram_impl == "pandas":
-        gcol = ngram_array_pandas(n)(F.col(text_col))
-    elif gram_impl == "expr":
-        gcol = ngram_array_expr(F.col(text_col), n)
-    else:
-        raise ValueError(f"gram_impl must be 'pandas' or 'expr', got {gram_impl!r}")
+    gcol = ngram_array_pandas(n)(F.col(text_col))
 
     def grams(d: DataFrame, out_id: str):
         out = d.select(F.col(id_col).alias(out_id), F.explode(gcol).alias("gram"))

@@ -77,13 +77,6 @@ def gauge_last(df: DataFrame, key: str, value_col: str, ts_col: str = "ts") -> D
     )
 
 
-def distinct_convs(df: DataFrame, exact: bool = True) -> DataFrame:
-    """Distinct conversations per sink/partition: exact for parity tests,
-    HLL sketch (approx_count_distinct) for 100 TB metrics."""
-    agg = F.countDistinct("conv_id") if exact else F.approx_count_distinct("conv_id")
-    return df.agg(agg.alias("n_convs"))
-
-
 def rollup_timeseries(
     df: DataFrame,
     ts_col: str,

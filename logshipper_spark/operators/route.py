@@ -10,7 +10,9 @@ so they can be benchmarked against each other (SURVEY.md §4):
   single shuffle; output bucketed by ``pmod(xxhash64(conv_id), B)`` so a
   downstream per-conversation consumer gets co-located files.
 * **per-sink**: cache upstream once, then N filtered writes.  Wins only when
-  sink predicates are highly selective and the cache fits memory.
+  sink predicates are highly selective and the cache fits memory.  Each
+  write is ``sink_rows`` + ``write_bucketed``, the pair
+  ``CheckpointedRunner.run`` also uses.
 
 Skew: mega-conversations are salted on the WRITE path only —
 ``salt = pmod(xxhash64(conv_id, turn_idx), S)`` spreads one hot conv over S
@@ -22,7 +24,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from logshipper_spark.plans.spec import ACTIVE, SINKS
 
 
 def with_bucket(df: DataFrame, key: str = "conv_id", n_buckets: int = 64,
@@ -76,6 +80,45 @@ def write_fanout_explode(
     )
 
 
+def sink_rows(df_with_sinks: DataFrame, sink: str, key: str = "conv_id",
+              n_buckets: int = 64) -> DataFrame:
+    """The rows delivered to ``sink``, bucketed for ``write_bucketed`` and
+    stripped of the pipeline's control columns.
+
+    Filters on sink membership ONLY — not ``__active``: a forward that fired
+    before a later drop already delivered (same contract as
+    ``Pipeline.routed``; drop only prevents FUTURE forwards, which step
+    gating handles).
+
+    Delivery MULTIPLICITY matches the explode strategy: two steps both
+    forwarding to the same sink deliver the row twice (the reference fires
+    each output handler per message) — hence the size(filter(...)) +
+    explode(sequence) copy expansion rather than a plain array_contains,
+    which would dedupe (r4 review finding)."""
+    n_onto = F.size(F.filter(F.col(SINKS), lambda s: s == F.lit(sink)))
+    sel = (
+        df_with_sinks.withColumn("__n_onto", n_onto)
+        .where(F.col("__n_onto") > 0)
+        .withColumn("__copy", F.explode(F.sequence(F.lit(1), F.col("__n_onto"))))
+        .drop("__n_onto", "__copy", ACTIVE, SINKS)
+    )
+    return with_bucket(sel, key=key, n_buckets=n_buckets)
+
+
+def write_bucketed(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    """One sink's write: shuffle on ``bucket``, sorted runs per
+    conversation, one directory per bucket.  The sort LEADS with bucket so
+    the writer's required ordering is satisfied and no second
+    (spill-unstable) sort is inserted (r4 review finding)."""
+    (
+        df.repartition("bucket")
+        .sortWithinPartitions("bucket", "conv_id", "turn_idx")
+        .write.mode(mode)
+        .partitionBy("bucket")
+        .parquet(path)
+    )
+
+
 def write_fanout_per_sink(
     df_with_sinks: DataFrame,
     sink_names: list[str],
@@ -84,40 +127,15 @@ def write_fanout_per_sink(
     key: str = "conv_id",
     mode: str = "overwrite",
 ) -> None:
-    """Alternative strategy: persist once, one filtered write per sink.
-
-    Filters on sink membership ONLY — not ``__active``: a forward that fired
-    before a later drop already delivered (same contract as
-    ``Pipeline.routed`` and ``CheckpointedRunner.run``; drop only prevents
-    FUTURE forwards, which step gating handles).
-
-    Delivery MULTIPLICITY matches the explode strategy: two steps both
-    forwarding to the same sink deliver the row twice (the reference fires
-    each output handler per message) — hence the size(filter(...)) +
-    explode(sequence) copy expansion rather than a plain array_contains,
-    which would dedupe (r4 review finding)."""
+    """Alternative strategy: persist once, one ``sink_rows`` write per
+    sink — same per-sink rows as the explode strategy."""
     from concurrent.futures import ThreadPoolExecutor
-
-    from logshipper_spark.plans.spec import ACTIVE, SINKS
 
     cached = df_with_sinks.persist()
     try:
         def _write(sink: str) -> None:
-            n_onto = F.size(F.filter(F.col(SINKS), lambda s: s == F.lit(sink)))
-            sel = (
-                cached.withColumn("__n_onto", n_onto)
-                .where(F.col("__n_onto") > 0)
-                .withColumn("__copy", F.explode(F.sequence(F.lit(1), F.col("__n_onto"))))
-                .drop("__n_onto", "__copy", ACTIVE, SINKS)
-            )
-            sel = with_bucket(sel, key=key, n_buckets=n_buckets)
-            (
-                sel.repartition("bucket")
-                .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-                .write.mode(mode)
-                .partitionBy("bucket")
-                .parquet(os.path.join(out_dir, f"sink={sink}"))
-            )
+            write_bucketed(sink_rows(cached, sink, key=key, n_buckets=n_buckets),
+                           os.path.join(out_dir, f"sink={sink}"), mode=mode)
 
         # Per-sink writes are independent jobs over the shared cache —
         # submit them concurrently so later sinks' tasks back-fill the
@@ -134,7 +152,3 @@ def write_fanout_per_sink(
                 f.result()
     finally:
         cached.unpersist()
-
-
-def read_sink(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
-    return spark.read.parquet(out_dir).where(F.col("sink") == sink)

@@ -24,7 +24,7 @@ from __future__ import annotations
 import os
 from typing import Any
 
-from logshipper_spark.plans.spec import Pipeline, compile_pipeline
+from logshipper_spark.plans.spec import Pipeline
 
 try:
     import yaml
@@ -106,10 +106,3 @@ class PipelineManager:
         DataFrame (``PipelineManager.process(message, pipeline)`` [approx],
         columnar)."""
         return self.pipelines[name].apply(df)
-
-
-def load_pipeline_yaml(text: str, default_field: str = "text") -> Pipeline:
-    """Compile a single YAML pipeline document."""
-    if yaml is None:
-        raise RuntimeError("pyyaml is required for YAML pipeline configs")
-    return compile_pipeline(yaml.safe_load(text) or [], default_field=default_field)

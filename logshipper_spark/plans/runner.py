@@ -30,10 +30,10 @@ import time
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from logshipper_spark.operators.route import with_bucket
-from logshipper_spark.plans.spec import ACTIVE, SINKS, Pipeline
+from logshipper_spark.operators.route import sink_rows, write_bucketed
+from logshipper_spark.plans.spec import Pipeline
 
 
 @dataclass
@@ -104,25 +104,12 @@ class CheckpointedRunner:
                 if fail_after is not None and i >= fail_after:
                     raise RuntimeError(f"injected failure before sink {sink}")
                 t0 = time.time()
-                # size(filter)+explode, not array_contains: a row forwarded
-                # to the same sink by TWO steps must deliver twice, matching
-                # the explode fan-out strategy and the reference's
-                # per-handler delivery (r4 review finding)
-                n_onto = F.size(F.filter(F.col(SINKS), lambda s: s == F.lit(sink)))
-                sel = (
-                    cached.withColumn("__n_onto", n_onto)
-                    .where(F.col("__n_onto") > 0)
-                    .withColumn("__copy", F.explode(F.sequence(F.lit(1), F.col("__n_onto"))))
-                    .drop("__n_onto", "__copy", ACTIVE, SINKS)
-                )
-                sel = with_bucket(sel, n_buckets=self.n_buckets)
+                sel = sink_rows(cached, sink, n_buckets=self.n_buckets)
                 # per-partition lineage piggybacked on the write action via
                 # observe(): one conditional count per bucket (≤n_buckets
                 # codegen'd aggregates), so the sink path is computed and
                 # scanned exactly ONCE — no post-write rescan (at 100 TB a
                 # re-read of the written output doubles sink I/O per sink)
-                from pyspark.sql import Observation
-
                 obs = Observation(f"lineage_{snapshot_id}_{sink}")
                 metrics = [
                     F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).cast("long").alias(f"b{b}")
@@ -130,16 +117,7 @@ class CheckpointedRunner:
                 ]
                 sel = sel.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
                 path = os.path.join(out_dir, f"sink={sink}", sink_subdir).rstrip("/")
-                (
-                    sel.repartition("bucket")
-                    # bucket leads the sort so the writer's required
-                    # ordering is satisfied and no second (spill-unstable)
-                    # sort is inserted (r4 review finding)
-                    .sortWithinPartitions("bucket", "conv_id", "turn_idx")
-                    .write.mode("overwrite")
-                    .partitionBy("bucket")
-                    .parquet(path)
-                )
+                write_bucketed(sel, path)
                 got = obs.get  # blocks until the write action completes
                 per_bucket = [
                     {"bucket": b, "rows": got[f"b{b}"]}

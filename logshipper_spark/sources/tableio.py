@@ -1,5 +1,5 @@
-"""Table IO abstraction: Iceberg when the runtime jars are present, parquet
-directory layout otherwise.
+"""Table IO abstraction: a parquet directory mirror of the Iceberg table
+layout.
 
 The production design (SURVEY.md §2.9) targets Iceberg tables partitioned by
 ``days(ts), bucket(64, conv_id)`` so Catalyst gets partition pruning on both
@@ -21,15 +21,6 @@ import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        jvm = spark.sparkContext._jvm
-        jvm.Class.forName("org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 @dataclass

@@ -111,77 +111,6 @@ def edge_stream(stream: DataFrame, trigger_col: str = "role",
     )
 
 
-def edge_stream_tws(stream: DataFrame, trigger_col: str = "role",
-                    key_col: str = "conv_id", ttl_ms: int | None = None):
-    """Spark-4-native stateful change-detection via
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState`` (typed per-key value state, built-in state
-    TTL instead of hand-rolled timeout timers, RocksDB-backed).
-
-    EXPERIMENTAL / UNVERIFIED — ENVIRONMENT-BLOCKED in this sandbox: the
-    transformWithState Python state client speaks protobuf to the JVM
-    state server, and ``google.protobuf`` is not installed here
-    (re-checked round 4; no pip allowed).  The import gate below raises a
-    clear error; ``edge_stream`` (applyInPandasWithState) remains the
-    tested default.  Because this path has never executed against a live
-    transformWithStateInPandas runtime, its API details (getValueState
-    schema string, timeMode casing, handleInputRows contract) are written
-    from the public Spark 4 docs but UNVERIFIED — validate on a
-    protobuf-equipped cluster before relying on it.  Once verified, it is
-    the preferable path there: value-state TTL evicts idle conversations
-    inside RocksDB without a timer firing per evicted key.
-    """
-    try:
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor, StatefulProcessorHandle,
-        )
-        import google.protobuf  # noqa: F401 — the runtime dep TWS needs
-    except ImportError as e:  # pragma: no cover — absent in this container
-        raise ImportError(
-            "transformWithStateInPandas requires google.protobuf, which is "
-            "not installed in this environment; use edge_stream() instead"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, T.StringType()),
-            T.StructField("turn_idx", T.IntegerType()),
-            T.StructField("value", T.StringType()),
-        ]
-    )
-
-    class EdgeProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            # TTL is declarative: RocksDB drops idle keys; no timer path,
-            # no per-eviction callback, no empty emission
-            self.last = handle.getValueState("last", "last STRING", ttl_ms)
-
-        def handleInputRows(self, key, rows, timer_values):
-            got = self.last.get()
-            last = got[0] if got is not None else None
-            pdf = pd.concat(list(rows), ignore_index=True).sort_values("turn_idx")
-            keep = []
-            for v, idx in zip(pdf[trigger_col], pdf["turn_idx"]):
-                if last is None or v != last:
-                    keep.append((key[0], int(idx), v))
-                last = v
-            self.last.update((last,))
-            yield pd.DataFrame(keep, columns=[key_col, "turn_idx", "value"])
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=EdgeProcessor(),
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime" if ttl_ms else "None",
-    )
-
-
 def dedup_stream(
     stream: DataFrame,
     key_cols: list[str],

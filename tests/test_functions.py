@@ -6,6 +6,19 @@ import pytest
 from logshipper_spark.functions import dedup, multimodal, similarity, textstats
 
 
+def ngram_array_expr(col, n: int):
+    """Distinct word n-grams as a pure JVM expression — the row-for-row
+    reference for ``textstats.ngram_array_pandas``.  Too slow for a hot
+    path: ``F.transform``'s interpreted lambda re-evaluates the tokenize
+    subexpression per element.  NULL text gives a NULL array, as in the
+    kernel (an unguarded ``split(NULL)`` chain yields ``['']``)."""
+    toks = F.split(F.lower(F.regexp_replace(col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
+    toks = F.filter(toks, lambda t: t != "")
+    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
+    grams = F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
+    return F.when(col.isNotNull(), grams)
+
+
 @pytest.fixture(scope="module")
 def docs(spark):
     rows = [
@@ -113,26 +126,12 @@ class TestDedup:
         assert (0, 1) in pairs and pairs[(0, 1)] == d01
         assert not any(2 in p for p in pairs)
 
-    def test_minhash_signature_column_form_matches_jvm_aggregate(self, spark, docs):
-        """Drift guard (r4 review): the interpreted Column form and the
-        explode+aggregate scale path share the xxhash64 basis and must
-        produce IDENTICAL signatures."""
-        small = docs.limit(20)
-        col_form = {r["doc_id"]: r["sig"] for r in small.select(
-            "doc_id", dedup.minhash_signature(F.col("text"), num_hashes=8).alias("sig")
-        ).collect()}
-        agg_form = {r["id"]: r["sig"] for r in
-                    dedup.minhash_signatures(small, num_hashes=8).collect()}
-        assert col_form == agg_form
-
     def test_minhash_seed_threads_through_candidates(self, docs):
         """r4 review: seed was unreachable from the candidate/dedup API."""
         a = {(r["id_a"], r["id_b"]) for r in
-             dedup.minhash_dedup_pairs(docs, threshold=0.5, strategy="jvm",
-                                       seed=7).collect()}
+             dedup.minhash_dedup_pairs(docs, threshold=0.5, seed=7).collect()}
         b = {(r["id_a"], r["id_b"]) for r in
-             dedup.minhash_dedup_pairs(docs, threshold=0.5, strategy="jvm",
-                                       seed=7777).collect()}
+             dedup.minhash_dedup_pairs(docs, threshold=0.5, seed=7777).collect()}
         # exact-verify stage makes true pairs seed-independent; the call
         # itself must accept the seed without TypeError
         assert a == b
@@ -229,18 +228,6 @@ class TestSimilarity:
         sims = [r["cosine_sim"] for r in out]
         assert sims == sorted(sims, reverse=True)
         assert out[0]["vec_id"] == 0  # tiebreak by id among angle-0 vectors
-
-    def test_numpy_scan_matches_jvm_scan(self, emb):
-        """cosine_topk_pandas (Arrow numpy matmul) row-for-row vs the JVM
-        expression path, including surviving an empty partition (r4 review:
-        np.stack([]) crashed on empty Arrow batches; previously untested)."""
-        q = [1.0, 0.0, 0.0, 0.0]
-        jvm = [(r["vec_id"], r["cosine_sim"]) for r in
-               similarity.cosine_topk(emb, q, k=5).collect()]
-        # repartition(16) over 50 rows guarantees some empty partitions
-        pdx = [(r["vec_id"], r["cosine_sim"]) for r in
-               similarity.cosine_topk_pandas(emb.repartition(16), q, k=5).collect()]
-        assert jvm == pdx
 
     def test_lsh_recall_vs_exact(self, emb):
         q = [1.0, 0.0, 0.0, 0.0]
@@ -441,10 +428,12 @@ class TestCuration:
         assert sorted(r["doc_id"] for r in kept) == [3, 4, 5, 6]
 
     def test_gram_impls_agree_row_for_row(self, spark, docs):
-        # Arrow gram kernel (hot-path default) vs the pure-expression form:
-        # identical (doc_id, gram) multisets, incl. short-doc degenerates
+        # Arrow gram kernel (hot-path default) vs the pure-expression
+        # reference: identical (doc_id, gram) multisets, incl. short-doc
+        # degenerates and NULL text
         short = spark.createDataFrame(
-            [(9001, "one two"), (9002, ""), (9003, "Sole"), (9004, "a b c d e f")],
+            [(9001, "one two"), (9002, ""), (9003, "Sole"), (9004, "a b c d e f"),
+             (9005, None)],
             "doc_id long, text string",
         )
         for frame in (docs.limit(100), short):
@@ -452,20 +441,15 @@ class TestCuration:
                 "doc_id", F.explode(textstats.ngram_array_pandas(5)(F.col("text"))).alias("g")
             )
             b = frame.select(
-                "doc_id", F.explode(textstats.ngram_array_expr(F.col("text"), 5)).alias("g")
+                "doc_id", F.explode(ngram_array_expr(F.col("text"), 5)).alias("g")
             )
             assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    def test_contamination_gram_impl_flag(self, spark, docs):
-        bench = docs.where(F.pmod("doc_id", F.lit(10)) == 0)
-        train = docs.where(F.pmod("doc_id", F.lit(10)) != 0)
-        pd_out = {(r["doc_id"], r["n_hits"])
-                  for r in textstats.contamination_check(train, bench, n=3).collect()}
-        ex_out = {(r["doc_id"], r["n_hits"])
-                  for r in textstats.contamination_check(train, bench, n=3, gram_impl="expr").collect()}
-        assert pd_out == ex_out and len(pd_out) > 0
-        with pytest.raises(ValueError, match="gram_impl"):
-            textstats.contamination_check(train, bench, gram_impl="quantum")
+        # NULL in, NULL out in both forms — not [''] and not a crash
+        got = short.where(F.col("doc_id") == 9005).select(
+            textstats.ngram_array_pandas(5)(F.col("text")).alias("a"),
+            ngram_array_expr(F.col("text"), 5).alias("b"),
+        ).first()
+        assert got["a"] is None and got["b"] is None
 
     def test_quality_cutoff_filter_matches_quantile_semantics(self, spark):
         # scale path: same survivors as the percent_rank variant when scores
@@ -577,12 +561,10 @@ class TestSignaturePaths:
             assert col_sh[k] == v
 
     def test_minhash_jvm_and_pandas_same_dups(self, spark, docs):
-        # different hash families → different signatures, but both paths
-        # must find the exact-duplicate pairs
-        for strategy in ("jvm", "pandas"):
-            pairs = dedup.minhash_dedup_pairs(docs, threshold=0.99, strategy=strategy)
-            got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-            assert {(0, 1), (0, 2), (1, 2)} <= got, strategy
+        # the Arrow signature path must find every exact-duplicate pair
+        pairs = dedup.minhash_dedup_pairs(docs, threshold=0.99)
+        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
+        assert {(0, 1), (0, 2), (1, 2)} <= got
 
     def test_hyperplane_column_and_df_paths_agree(self, spark):
         emb = spark.createDataFrame(

@@ -7,6 +7,7 @@ from logshipper_spark.operators import aggregate as agg
 from logshipper_spark.operators.enrich import allowlist, denylist, enrich
 from logshipper_spark.operators.parse import grok_native
 from logshipper_spark.operators.route import write_fanout_explode, write_fanout_per_sink
+from logshipper_spark.plans.runner import CheckpointedRunner
 from logshipper_spark.plans.spec import compile_pipeline
 from logshipper_spark.sources.transcripts import role_dim, tool_dim
 
@@ -90,17 +91,26 @@ class TestRouteWrites:
 
     @pytest.mark.parametrize("steps", [PIPE, PIPE_FWD_DROP])
     def test_explode_and_per_sink_strategies_agree(self, spark, transcripts, tmp_path, steps):
+        # all three fan-out paths deliver the same per-sink row multisets:
+        # the explode write, the per-sink writer and the checkpointed runner
+        # (the last two share route.sink_rows + route.write_bucketed)
         pipe = compile_pipeline(steps)
-        d1, d2 = str(tmp_path / "explode"), str(tmp_path / "persink")
+        d1, d2, d3 = (str(tmp_path / n) for n in ("explode", "persink", "runner"))
         sinks = sorted({s for st in steps for s in st.get("forward", [])})
         write_fanout_explode(pipe.routed(transcripts), d1)
         write_fanout_per_sink(pipe.apply(transcripts), sinks, d2)
+        rep = CheckpointedRunner(spark, str(tmp_path / "ckpt")).run(
+            transcripts, pipe, sinks, d3, snapshot_id="s1"
+        )
+        cols = ["conv_id", "turn_idx", "text"]
         for sink in sinks:
-            a = spark.read.parquet(d1).where(F.col("sink") == sink)
-            b = spark.read.parquet(f"{d2}/sink={sink}")
-            cols = ["conv_id", "turn_idx", "text"]
-            assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-            assert a.count() == b.count() > 0
+            a = spark.read.parquet(d1).where(F.col("sink") == sink).select(cols)
+            n = a.count()
+            assert n > 0
+            for other in (f"{d2}/sink={sink}", f"{d3}/sink={sink}"):
+                b = spark.read.parquet(other).select(cols)
+                assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, other
+            assert rep.written[sink] == n
 
     def test_forward_then_drop_still_delivers(self, spark, transcripts, tmp_path):
         pipe = compile_pipeline(self.PIPE_FWD_DROP)

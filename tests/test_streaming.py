@@ -111,34 +111,6 @@ def test_edge_stream_matches_batch_edge(spark, transcripts, tdir):
         q2.stop()
 
 
-def test_edge_stream_tws(spark, transcripts, tdir):
-    """transformWithStateInPandas variant: same results as edge_stream when
-    the environment has google.protobuf (the TWS state client's wire dep);
-    otherwise the import gate must raise the documented error."""
-    stream = S.read_transcript_stream(spark, tdir, max_files_per_trigger=100)
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        with pytest.raises(ImportError, match="google.protobuf"):
-            S.edge_stream_tws(stream, trigger_col="role", key_col="conv_id")
-        return
-
-    q, out = _memq(spark, S.edge_stream_tws(stream, trigger_col="role",
-                                            key_col="conv_id", ttl_ms=3_600_000))
-    try:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("conv_id").orderBy("turn_idx")
-        batch_n = (
-            transcripts.withColumn("prev", F.lag("role").over(w))
-            .where(F.col("prev").isNull() | (F.col("prev") != F.col("role")))
-            .count()
-        )
-        assert out.count() == batch_n
-    finally:
-        q.stop()
-
-
 def test_compiled_pipeline_applies_to_stream(spark, transcripts, tdir):
     """A compiled Pipeline is just DataFrame→DataFrame — it must run
     unchanged on a streaming frame (stateless subset)."""
