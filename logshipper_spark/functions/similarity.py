@@ -134,7 +134,12 @@ def pairwise_cosine_pandas(
     RAW double — callers round Spark-side (F.round) so the
     rounding/parity convention stays in one place.  float64 throughout,
     same convention as cosine_topk_batch/embedding_decontam (both
-    oracle-exact against DuckDB ::DOUBLE[] math)."""
+    oracle-exact against DuckDB ::DOUBLE[] math).
+
+    A pair with a NULL vector, or with vectors of different lengths, gets
+    a NULL cosine, as the column form gives; the batch never fails on it.
+    Vectors of one length are stacked together, so a batch may mix
+    dimensions."""
     import numpy as np
 
     def run(batches):
@@ -143,11 +148,18 @@ def pairwise_cosine_pandas(
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[va_col]])
-            B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vb_col]])
-            cos = (A * B).sum(axis=1) / (
-                np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-            )
+            dims = np.array([
+                -1 if va is None or vb is None or len(va) != len(vb) else len(va)
+                for va, vb in zip(pdf[va_col], pdf[vb_col])
+            ])
+            cos = np.full(len(pdf), np.nan)  # NaN → NULL on the Arrow side
+            for d in np.unique(dims[dims >= 0]):
+                rows = np.nonzero(dims == d)[0]
+                A = np.stack([np.asarray(pdf[va_col].iat[i], dtype=np.float64) for i in rows])
+                B = np.stack([np.asarray(pdf[vb_col].iat[i], dtype=np.float64) for i in rows])
+                cos[rows] = (A * B).sum(axis=1) / (
+                    np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
+                )
             yield pd.DataFrame(
                 {"id_a": pdf["id_a"], "id_b": pdf["id_b"], out_col: cos}
             )
@@ -216,19 +228,22 @@ def blocked_cosine_pairs(
                     out_a.extend([ids[r]] * js.size)
                     out_b.extend(ids[js])
                     out_c.extend(row[js])
-        # explicit dtypes: an empty pair set (e.g. a 1-row block) must not
-        # hand Arrow object-dtype columns
+        # the id column's own dtype (int64, or object for strings), so an
+        # empty pair set (e.g. a 1-row block) still converts to the
+        # declared id type
         return pd.DataFrame({
-            "id_a": np.asarray(out_a, dtype=np.int64),
-            "id_b": np.asarray(out_b, dtype=np.int64),
+            "id_a": np.asarray(out_a, dtype=ids.dtype),
+            "id_b": np.asarray(out_b, dtype=ids.dtype),
             "cosine_sim": np.asarray(out_c, dtype=np.float64),
         })
 
+    # id type derived from the input, as pairwise_cosine_pandas does
+    tid = df.schema[id_col].dataType.simpleString()
     cand = (
         df.select(id_col, block_col, vec_col)
         .where(F.col(block_col).isNotNull())
         .groupBy(block_col)
-        .applyInPandas(part, "id_a long, id_b long, cosine_sim double")
+        .applyInPandas(part, f"id_a {tid}, id_b {tid}, cosine_sim double")
     )
     return cand.select(
         "id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim")

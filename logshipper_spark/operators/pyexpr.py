@@ -17,6 +17,7 @@ documented expression subset with two lowering paths:
 from __future__ import annotations
 
 import ast
+from collections.abc import Mapping
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -124,7 +125,7 @@ def _validate_expr(tree: ast.Expression, allowed_names: set[str]) -> None:
             raise ValueError("python rewrite: only name/method calls are allowed")
 
 
-def compile_python_rewrite(params: dict | str, cols: dict[str, Column]) -> Column:
+def compile_python_rewrite(params: dict | str, cols: Mapping[str, Column]) -> Column:
     """Compile a python-rewrite spec to a Column (native or pandas-UDF)."""
     if isinstance(params, str):
         params = {"expr": params}

@@ -23,6 +23,7 @@ SURVEY.md §7 hard parts).
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -128,14 +129,27 @@ def write_fanout_per_sink(
     mode: str = "overwrite",
 ) -> None:
     """Alternative strategy: persist once, one ``sink_rows`` write per
-    sink — same per-sink rows as the explode strategy."""
-    from concurrent.futures import ThreadPoolExecutor
+    sink — same per-sink rows as the explode strategy.
+
+    Fails fast: after the first failed sink no further sink starts (queued
+    ones are cancelled), the writes already running finish, and the first
+    failure in sink order is re-raised."""
+    from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     cached = df_with_sinks.persist()
+    failed = threading.Event()
     try:
         def _write(sink: str) -> None:
-            write_bucketed(sink_rows(cached, sink, key=key, n_buckets=n_buckets),
-                           os.path.join(out_dir, f"sink={sink}"), mode=mode)
+            # the worker freed by a failure may dequeue the next sink before
+            # the caller cancels it: that sink must not start either
+            if failed.is_set():
+                return
+            try:
+                write_bucketed(sink_rows(cached, sink, key=key, n_buckets=n_buckets),
+                               os.path.join(out_dir, f"sink={sink}"), mode=mode)
+            except BaseException:
+                failed.set()
+                raise
 
         # Per-sink writes are independent jobs over the shared cache —
         # submit them concurrently so later sinks' tasks back-fill the
@@ -148,7 +162,12 @@ def write_fanout_per_sink(
         # concurrent jobs (CLAUDE.md steal hazard); the back-fill benefit
         # saturates well below that (review r6)
         with ThreadPoolExecutor(max_workers=max(1, min(8, len(sink_names)))) as ex:
-            for f in [ex.submit(_write, s) for s in sink_names]:
-                f.result()
+            futs = [ex.submit(_write, s) for s in sink_names]
+            wait(futs, return_when=FIRST_EXCEPTION)
+            for f in futs:
+                f.cancel()
+            for f in futs:
+                if not f.cancelled():
+                    f.result()
     finally:
         cached.unpersist()

@@ -18,6 +18,11 @@ plan — there is no per-row interpreter:
 * backreferences    → ``{1}``/``{name}`` templates compile to
                       ``regexp_extract`` on the step's match field
 
+Each step lowers to ONE Project that names only the columns the step
+assigns or adds (``withColumns``); input fields are looked up lazily, so
+a step's driver-side cost follows the handlers it runs, not the width of
+the frame (every PySpark 4 Column call is several py4j round trips).
+
 Everything lowers to codegen'd JVM expressions (``rlike``,
 ``regexp_extract``, ``regexp_replace``, ``concat``); the only Python in the
 plan is the optional vectorized ``python`` rewrite (pandas UDF), mirroring
@@ -40,6 +45,8 @@ from __future__ import annotations
 
 import itertools
 import re
+from collections import ChainMap
+from collections.abc import Iterator, Mapping
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -98,7 +105,35 @@ class _MatchInfo:
     cond: Column | None = None         # full step-match condition
 
 
-def _compile_template(tmpl: str, cols: dict[str, Column], m: _MatchInfo) -> Column:
+class _Fields(Mapping):
+    """A step's input fields by name, each ``F.col`` built on first use
+    and then reused.  A PySpark 4 Column call is several py4j round trips
+    (PySpark records its call site), so building one per input column on
+    every step cost driver time that grew with the frame's width."""
+
+    def __init__(self, names: list[str]):
+        self._names = names
+        self._known = frozenset(names)
+        self._resolved: dict[str, Column] = {}
+
+    def __getitem__(self, name: str) -> Column:
+        if name not in self._known:
+            raise KeyError(name)
+        if name not in self._resolved:
+            self._resolved[name] = F.col(name)
+        return self._resolved[name]
+
+    def __contains__(self, name: object) -> bool:
+        return name in self._known
+
+    def __iter__(self) -> Iterator[str]:
+        return iter(self._names)
+
+    def __len__(self) -> int:
+        return len(self._names)
+
+
+def _compile_template(tmpl: str, cols: Mapping[str, Column], m: _MatchInfo) -> Column:
     """``"x {field} {1}"`` → concat of literals, columns and backref extracts."""
     parts: list[Column] = []
     pos = 0
@@ -235,7 +270,7 @@ class Pipeline:
                         gate_col: str | None = None,
                         entry_gate: Column | None = None,
                         match_info: "_MatchInfo | None" = None) -> DataFrame:
-        cols: dict[str, Column] = {c: F.col(c) for c in df.columns}
+        cols = _Fields(df.columns)
         # a call continuation inherits the step's match context — the
         # reference keeps ONE regex context per step, so {group} backrefs
         # and `replace` must keep working after `call` (r4 review finding)
@@ -244,7 +279,6 @@ class Pipeline:
         # carries the caller's gate in (composed with post-call liveness)
         gate = entry_gate if entry_gate is not None else F.col(ACTIVE)
         assignments: dict[str, Column] = {}
-        new_cols: list[str] = []
 
         def current(name: str) -> Column:
             if name in assignments:
@@ -256,8 +290,6 @@ class Pipeline:
         def assign(name: str, expr: Column) -> None:
             old = current(name) if (name in cols or name in assignments) else F.lit(None).cast("string")
             assignments[name] = F.when(gate, expr).otherwise(old)
-            if name not in cols and name not in new_cols:
-                new_cols.append(name)
 
         for pos, (name, params) in enumerate(handlers):
             if name == "match":
@@ -272,7 +304,7 @@ class Pipeline:
                     assign(gname, F.coalesce(extracted, current(gname)))
             elif name == "set":
                 for k, v in params.items():
-                    assign(k, _compile_template(str(v), {**cols, **assignments}, m))
+                    assign(k, _compile_template(str(v), ChainMap(assignments, cols), m))
             elif name == "replace":
                 if m.field_name is None:
                     raise ValueError("replace requires a match in the same step")
@@ -318,7 +350,7 @@ class Pipeline:
 
                 assign(
                     params.get("field", self.default_field),
-                    compile_python_rewrite(params, {**cols, **assignments}),
+                    compile_python_rewrite(params, ChainMap(assignments, cols)),
                 )
             elif name == "sample":
                 # statsd-style rate sampling (logshipper/outputs.py statsd
@@ -362,10 +394,8 @@ class Pipeline:
                 cid = next(_CALL_IDS)
                 gate_tmp, saved_tmp = f"__call_gate_{cid}", f"__call_saved_{cid}"
                 assignments[gate_tmp] = gate
-                new_cols.append(gate_tmp)
                 assignments[saved_tmp] = F.col(ACTIVE)
-                new_cols.append(saved_tmp)
-                df = self._materialize(df, assignments, new_cols)
+                df = self._materialize(df, assignments)
                 df = df.withColumn(ACTIVE, F.col(gate_tmp))
                 df = sub.apply(df)
                 df = df.withColumn(
@@ -385,8 +415,7 @@ class Pipeline:
 
         if gate_col is not None:
             assignments[gate_col] = gate
-            new_cols.append(gate_col)
-        return self._materialize(df, assignments, new_cols)
+        return self._materialize(df, assignments)
 
     @staticmethod
     def _typed_null(df: DataFrame, name: str) -> Column:
@@ -397,19 +426,21 @@ class Pipeline:
         return F.lit(None).cast("string")
 
     @staticmethod
-    def _materialize(df: DataFrame, assignments: dict[str, Column], new_cols: list[str]) -> DataFrame:
+    def _materialize(df: DataFrame, assignments: dict[str, Column]) -> DataFrame:
         """ONE projection per step: every expression resolves against the
         step's INPUT (reference semantics — handlers in a step see the
         pre-step field values via the shared match context), and Catalyst
-        gets a single Project node to collapse."""
+        gets a single Project node to collapse.
+
+        Only the assigned columns are named: ``withColumns`` replaces an
+        existing field in place and appends new ones in first-assignment
+        order, which is the column order a full ``select`` over every
+        input column gave, without a Column call per untouched field."""
         if not assignments:
             return df
-        return df.select(
-            *[assignments.get(c, F.col(c)).alias(c) for c in df.columns],
-            *[assignments[k].alias(k) for k in new_cols if k not in df.columns],
-        )
+        return df.withColumns(assignments)
 
-    def _compile_match(self, params: Any, cols: dict[str, Column], m: _MatchInfo) -> Column:
+    def _compile_match(self, params: Any, cols: Mapping[str, Column], m: _MatchInfo) -> Column:
         """str → regex on default field; dict → field→regex, ALL must match
         (logshipper/filters.py::prepare_match [approx])."""
         if isinstance(params, str):
@@ -438,7 +469,7 @@ class Pipeline:
         m.cond = cond
         return cond if cond is not None else F.lit(True)
 
-    def _compile_edge_gate(self, df: DataFrame, params: dict, cols: dict[str, Column],
+    def _compile_edge_gate(self, df: DataFrame, params: dict, cols: Mapping[str, Column],
                            gate: Column) -> Column:
         """Stateful change-detection (logshipper/filters.py::prepare_edge
         [approx]): pass a row only when ``trigger`` differs from the value

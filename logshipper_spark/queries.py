@@ -23,6 +23,7 @@ from pyspark.sql.window import Window
 
 from logshipper_spark.functions import dedup, similarity, textstats
 from logshipper_spark.operators import aggregate as agg
+from logshipper_spark.sources.local import local_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -180,7 +181,7 @@ def route_fanout(spark, sf_dir):
     counts = ev.withColumn("sink", F.explode(sinks)).groupBy("sink").agg(
         F.count("*").alias("n")
     )
-    all_sinks = spark.createDataFrame([("archive",), ("errors",), ("billing",)], "sink string")
+    all_sinks = local_table(spark, [("archive",), ("errors",), ("billing",)], "sink string")
     return all_sinks.join(counts, "sink", "left").select(
         "sink", F.coalesce("n", F.lit(0)).alias("n")
     )
@@ -545,7 +546,7 @@ _KIND_DIM = [
 def enrich_lookup(spark, sf_dir):
     """lookup enrichment as a broadcast hash join (SURVEY §2.3)."""
     ev = _t(spark, sf_dir, "events")
-    dim = spark.createDataFrame(_KIND_DIM, "event_type string, kind string")
+    dim = local_table(spark, _KIND_DIM, "event_type string, kind string")
     return ev.join(F.broadcast(dim), "event_type", "left").select("event_id", "kind")
 
 
@@ -1798,7 +1799,7 @@ def tool_invocations_q(spark, sf_dir):
     """tool-invocation counter (north star aggregate): enrich a tool column
     via broadcast dim, count non-null per tool (operators/aggregate.py)."""
     ev = _t(spark, sf_dir, "events")
-    dim = spark.createDataFrame(_TOOL_DIM, "event_type string, tool string")
+    dim = local_table(spark, _TOOL_DIM, "event_type string, tool string")
     enriched = ev.join(F.broadcast(dim), "event_type", "left")
     return agg.tool_invocations(enriched)
 

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.window import Window
 
+from logshipper_spark.sources.local import local_table
+
 TRANSCRIPT_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -207,7 +209,7 @@ def role_dim(spark: SparkSession) -> DataFrame:
         ("tool", "machine", False, 0.2),
         ("operator", "human", True, 2.0),
     ]
-    return spark.createDataFrame(rows, "role string, role_class string, is_human boolean, weight double")
+    return local_table(spark, rows, "role string, role_class string, is_human boolean, weight double")
 
 
 def tool_dim(spark: SparkSession) -> DataFrame:
@@ -222,6 +224,6 @@ def tool_dim(spark: SparkSession) -> DataFrame:
         ("db", "retrieval", True, 0.004),
         ("ftp", "retrieval", False, 0.0),  # never appears in transcripts
     ]
-    return spark.createDataFrame(
-        rows, "tool string, tool_kind string, billable boolean, cost_per_call double"
+    return local_table(
+        spark, rows, "tool string, tool_kind string, billable boolean, cost_per_call double"
     )

@@ -112,6 +112,44 @@ class TestRouteWrites:
                 assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0, other
             assert rep.written[sink] == n
 
+    def test_per_sink_writer_fails_fast(self, spark, tmp_path, monkeypatch):
+        """A failed sink stops the fan-out: the error propagates, and no sink
+        queued behind the running writes starts or leaves a directory."""
+        import os
+        import threading
+
+        from logshipper_spark.operators import route
+
+        df = spark.createDataFrame(
+            [(f"c{i}", i, "x", ["bad", *[f"s{j}" for j in range(9)]]) for i in range(4)],
+            "conv_id string, turn_idx int, text string, __sinks array<string>",
+        ).withColumn("__active", F.lit(True))
+        sinks = ["bad", *[f"s{j}" for j in range(9)]]  # 10 sinks, 8 workers
+        real_write = route.write_bucketed
+        poisoned = threading.Event()
+        started = []
+
+        def write(sel, path, mode="overwrite"):
+            sink = os.path.basename(path).removeprefix("sink=")
+            if sink == "bad":
+                poisoned.set()
+                raise RuntimeError("poisoned sink")
+            # no good sink can finish (and free a worker) before the failure
+            assert poisoned.wait(timeout=60)
+            started.append(sink)
+            real_write(sel, path, mode=mode)
+
+        monkeypatch.setattr(route, "write_bucketed", write)
+        out = tmp_path / "ps"
+        with pytest.raises(RuntimeError, match="poisoned sink"):
+            write_fanout_per_sink(df, sinks, str(out), n_buckets=2)
+        queued = {"s7", "s8"}  # behind the first eight submissions
+        assert not queued & set(started)
+        for sink in queued:
+            assert not (out / f"sink={sink}").exists()
+        for sink in started:
+            assert (out / f"sink={sink}" / "_SUCCESS").exists()
+
     def test_forward_then_drop_still_delivers(self, spark, transcripts, tmp_path):
         pipe = compile_pipeline(self.PIPE_FWD_DROP)
         d = str(tmp_path / "fwd_drop")

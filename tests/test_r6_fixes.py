@@ -18,6 +18,7 @@
 import datetime as dt
 
 import pyspark.sql.functions as F
+import pytest
 
 from logshipper_spark.functions.curation import histogram_cutoff
 from logshipper_spark.functions.sketches import heavy_hitters, mg_summarize
@@ -268,6 +269,42 @@ class TestR6ReviewFixes:
         )
         # join form: NULL = NULL is false → no pairs; kernel must agree
         assert similarity.blocked_cosine_pairs(emb, "label", 0.1).count() == 0
+
+    def test_pairwise_cosine_null_or_ragged_vector_yields_null(self, spark):
+        """A NULL or ragged vector gives a NULL cosine (the column form's
+        result) instead of failing the whole Arrow batch, and pairs of a
+        different length in the same batch still compute."""
+        from logshipper_spark.functions import similarity
+
+        pairs = spark.createDataFrame(
+            [
+                (1, 2, [1.0, 0.0], [1.0, 1.0]),
+                (1, 3, None, [1.0, 0.0]),
+                (1, 4, [1.0, 0.0], None),
+                (1, 5, [1.0, 0.0], [1.0, 0.0, 0.0]),
+                (1, 6, [0.0, 2.0, 0.0], [0.0, 1.0, 0.0]),
+            ],
+            "id_a long, id_b long, va array<double>, vb array<double>",
+        ).coalesce(1)  # one Arrow batch holds every case
+        got = {r["id_b"]: r["cosine_sim"]
+               for r in similarity.pairwise_cosine_pandas(pairs).collect()}
+        assert got[2] == pytest.approx(2 ** -0.5)
+        assert got[3] is None and got[4] is None and got[5] is None
+        assert got[6] == pytest.approx(1.0)
+
+    def test_blocked_cosine_keeps_string_ids(self, spark):
+        """The id output type follows the input id column: string ids pass
+        through, including from a block with no pairs."""
+        from logshipper_spark.functions import similarity
+
+        emb = spark.createDataFrame(
+            [("a", "x", [1.0, 0.0]), ("b", "x", [1.0, 0.1]), ("c", "y", [0.0, 1.0])],
+            "vec_id string, label string, embedding array<double>",
+        )
+        out = similarity.blocked_cosine_pairs(emb, "label", 0.5)
+        assert out.schema["id_a"].dataType.simpleString() == "string"
+        assert out.schema["id_b"].dataType.simpleString() == "string"
+        assert [(r["id_a"], r["id_b"]) for r in out.collect()] == [("a", "b")]
 
     def test_jaccard_null_text_yields_null_not_crash(self, spark):
         """A NULL-text doc must flow through the verify stage as a NULL

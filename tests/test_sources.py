@@ -2,6 +2,7 @@
 
 import pyspark.sql.functions as F
 
+from logshipper_spark.sources.local import local_table
 from logshipper_spark.sources.transcripts import TRANSCRIPT_SCHEMA, generate_transcripts, role_dim, tool_dim
 
 
@@ -62,6 +63,69 @@ def test_dims(spark, transcripts):
     dim_roles = {r["role"] for r in rd.collect()}
     assert "moderator" in roles - dim_roles  # transcripts has a dim-miss role
     assert "operator" in dim_roles - roles  # dim has an unused role
+
+
+def _analyzed(df) -> str:
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _same_as_list_form(spark, df, rows, ddl):
+    """``df`` keeps the rows, names, types and nullability that
+    ``createDataFrame(list, ddl)`` gives for the same rows."""
+    ref = spark.createDataFrame(rows, ddl)
+    assert df.schema == ref.schema
+    assert sorted(df.collect()) == sorted(ref.collect())
+
+
+class TestDims:
+    """Dimension tables are JVM-local relations: a broadcast of a
+    Python-RDD ``LogicalRDD`` runs a Python-worker job every time."""
+
+    def test_transcript_dims_are_local_relations(self, spark):
+        for build, ddl in [
+            (role_dim, "role string, role_class string, is_human boolean, weight double"),
+            (tool_dim, "tool string, tool_kind string, billable boolean, cost_per_call double"),
+        ]:
+            df = build(spark)
+            assert _analyzed(df).startswith("LocalRelation"), build.__name__
+            _same_as_list_form(spark, df, [tuple(r) for r in df.collect()], ddl)
+        assert sorted(r["role"] for r in role_dim(spark).collect()) == [
+            "assistant", "operator", "system", "tool", "user"
+        ]
+        assert tool_dim(spark).where(F.col("tool") == "python").first()["cost_per_call"] == 0.01
+
+    def test_query_dims_are_local_relations(self, spark, tmp_path, monkeypatch):
+        from logshipper_spark import queries
+
+        spark.createDataFrame(
+            [(1, "click"), (2, "error"), (3, "purchase"), (4, "view")],
+            "event_id bigint, event_type string",
+        ).write.parquet(str(tmp_path / "events.parquet"))
+        built = []
+
+        def recording(spark_, rows, ddl):
+            df = local_table(spark_, rows, ddl)
+            built.append((rows, ddl, df))
+            return df
+
+        monkeypatch.setattr(queries, "local_table", recording)
+        for name in ("route_fanout", "enrich_lookup", "tool_invocations"):
+            out = queries.QUERIES[name](spark, str(tmp_path))
+            assert "LogicalRDD" not in _analyzed(out), name
+            out.collect()
+        assert [ddl for _, ddl, _ in built] == [
+            "sink string", "event_type string, kind string", "event_type string, tool string"
+        ]
+        for rows, ddl, df in built:
+            assert _analyzed(df).startswith("LocalRelation"), ddl
+            _same_as_list_form(spark, df, rows, ddl)
+
+    def test_enrich_plan_scans_no_python_rdd(self, spark, transcripts):
+        from logshipper_spark.operators.enrich import enrich
+
+        plan = enrich(transcripts, role_dim(spark), on="role")._jdf.queryExecution()
+        text = plan.executedPlan().toString()
+        assert "LocalTableScan" in text and "ExistingRDD" not in text
 
 
 class TestTableIO:

@@ -458,3 +458,66 @@ class TestMissingFieldMatch:
         df = make_df(spark, [("c1", 0, "x")])
         pipe = compile_pipeline([{"match": {"ghost": "(a)"}, "set": {"t": "v{1}"}}])
         assert pipe.surviving(df).collect()[0]["t"] is None  # gated, never set
+
+
+class TestPlanBuildCost:
+    """A step names only the columns it assigns: its driver-side cost (each
+    PySpark 4 Column call is several py4j round trips) must not grow with
+    the frame's width, and the optimized plan must not change."""
+
+    SPEC = [
+        {"match": {"text": r"^(?P<level>[A-Z]+) "}, "set": {"tag": "{level}"}},
+        {"match": "^ERROR ", "forward": ["errors"]},
+        {"match": "^DEBUG ", "drop": True, "forward": ["archive"]},
+    ]
+
+    def test_col_calls_independent_of_width(self, spark, monkeypatch):
+        def wide(n):
+            extra = [F.lit(i).alias(f"c{i}") for i in range(n - 1)]
+            return spark.range(1).select(F.lit("ERROR x").alias("text"), *extra)
+
+        frames = {n: wide(n) for n in (20, 200)}
+        real_col, counter, calls = F.col, [], {}
+        monkeypatch.setattr(F, "col", lambda name: counter.append(name) or real_col(name))
+        for n, df in frames.items():
+            counter.clear()
+            routed = compile_pipeline(self.SPEC).routed(df)
+            calls[n] = len(counter)
+            assert len(routed.columns) == n + 3  # level, tag, sink
+        assert calls[20] == calls[200] > 0
+
+    def test_bench_spec_plan_matches_select_form(self, spark, transcripts, monkeypatch):
+        """The optimized ``routed`` plan of the bench spec is the one the
+        earlier full-``select`` projection gave, expression ids aside."""
+        import re
+
+        from logshipper_spark.operators.enrich import enrich
+        from logshipper_spark.operators.parse import grok_native
+        from logshipper_spark.plans.spec import Pipeline
+        from logshipper_spark.sources.transcripts import role_dim, tool_dim
+
+        bench_spec = [
+            {"match": {"text": "^ERROR "}, "forward": ["errors"]},
+            {"match": {"text": "^<"}, "forward": ["syslog"]},
+            {"match": {"text": "^DEBUG "}, "drop": True},
+            {"forward": ["archive"]},
+        ]
+        enriched = enrich(
+            enrich(grok_native(transcripts), role_dim(spark), on="role"), tool_dim(spark), on="tool"
+        )
+
+        def optimized() -> str:
+            routed = compile_pipeline(bench_spec).routed(enriched)
+            plan = routed._jdf.queryExecution().optimizedPlan().toString()
+            return re.sub(r"#\d+L?", "#", plan)
+
+        def select_form(df, assignments):
+            return df.select(
+                *[assignments.get(c, F.col(c)).alias(c) for c in df.columns],
+                *[e.alias(k) for k, e in assignments.items() if k not in df.columns],
+            )
+
+        got = optimized()
+        monkeypatch.setattr(Pipeline, "_materialize", staticmethod(select_form))
+        assert got == optimized()
+        assert "Generate explode" in got

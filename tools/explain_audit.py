@@ -23,6 +23,9 @@ CHECKS = {
     "enrich_lookup": [
         ("broadcast hash join", r"BroadcastHashJoin", True),
         ("no sort-merge join", r"SortMergeJoin", False),
+        # a list-built dim is a Python-RDD scan: every broadcast of it runs
+        # a Python-worker job (sources/local.py builds JVM-local dims)
+        ("no Python-RDD dim scan", r"Scan ExistingRDD", False),
     ],
     "revenue_by_nation": [("broadcast joins", r"BroadcastHashJoin", True)],
     # aggregates do map-side partial aggregation
@@ -241,7 +244,25 @@ def extra_checks(spark, sf_dir: str) -> int:
           r"^BroadcastHashJoin\|BroadcastHashJoin$", True)
     check("jaccard_verify", "no sort-merge join", jp, r"SortMergeJoin", False)
 
-    # 4. asof skew flag: the carry-forward window partitions on
+    # 4. the ship pipeline's dims: an enriched, routed frame broadcasts
+    # JVM-local relations, never a Python-RDD scan
+    from logshipper_spark.operators.enrich import enrich
+    from logshipper_spark.sources.transcripts import role_dim, tool_dim
+
+    roles = F.array(*[F.lit(r) for r in ("user", "assistant", "tool")])
+    turns = df.withColumns({
+        "role": F.element_at(roles, F.col("turn_idx") % 3 + 1),
+        "tool": F.when(F.col("turn_idx") % 3 == 2, F.lit("search")),
+    })
+    ep = _plan(pipe.routed(
+        enrich(enrich(turns, role_dim(spark), on="role"), tool_dim(spark), on="tool")
+    ))
+    check("enrich_routed", "broadcast dim joins",
+          "|".join(re.findall(r"BroadcastHashJoin", ep)),
+          r"^BroadcastHashJoin\|BroadcastHashJoin$", True)
+    check("enrich_routed", "no Python-RDD dim scan", ep, r"Scan ExistingRDD", False)
+
+    # 5. asof skew flag: the carry-forward window partitions on
     # (key, time-bucket) — a hot key spreads over tasks instead of one
     from logshipper_spark.operators.asof import asof_join
 
