@@ -48,6 +48,7 @@ from logshipper_spark.functions.textstats import (
     fingerprint,
     stratified_sample,
 )
+from logshipper_spark.sources.local import local_table
 
 
 def histogram_cutoff(hist: DataFrame, keep_fraction: float,
@@ -215,7 +216,7 @@ class IncrementalCurator:
             if exclude_epoch is not None and "epoch" in df.columns:
                 df = df.where(F.col("epoch") != f"e{exclude_epoch}")
             return df.select("fp")
-        return self.spark.createDataFrame([], "fp string")
+        return local_table(self.spark, [], "fp string")
 
     # -- phases -----------------------------------------------------------
     def _epoch_dir(self, epoch_id: int | None) -> str:
@@ -284,7 +285,7 @@ class IncrementalCurator:
             if exclude_epoch is not None and "epoch" in df.columns:
                 df = df.where(F.col("epoch") != f"e{exclude_epoch}")
             return df.select("q_score", "cnt")
-        return self.spark.createDataFrame([], "q_score double, cnt long")
+        return local_table(self.spark, [], "q_score double, cnt long")
 
     def cutoff(self) -> float | None:
         """Current quantile cutoff from the merged running histogram."""

@@ -1,29 +1,65 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float> or array<double>).
 
-* ``cosine_topk``    — brute-force exact top-k: one narrow pass computing
-  dot products against a broadcast query vector (``F.zip_with`` +
-  ``F.aggregate``, JVM-side), then a global top-k.  The correctness
-  baseline and the right answer for a single query even at scale (scan is
-  embarrassingly parallel; only k rows shuffle).
+Every vector kernel runs on Arrow batches (``mapInArrow`` /
+``applyInArrow``) and reads its vectors through one helper, ``_vectors``,
+which also fixes the input contract in one place:
+
+* a vector that is NULL, has a NULL element, or has a length other than
+  its counterpart's (the query, a centroid, the bench matrix, the other
+  pair side or the other rows of its block) gets a NULL similarity, as the
+  column form ``zip_with``/``aggregate`` cosine gives; it never fails the
+  batch;
+* NULL similarities rank after every non-NULL one;
+* ids pass through as the input Arrow array, so an output id column has
+  the input schema's type (long, string, ...).
+
+Operators:
+
+* ``cosine_topk``    — brute-force exact top-k: each Arrow batch keeps its
+  local top-k (one numpy matmul against the query), then
+  ``orderBy().limit(k)`` merges them.  The correctness baseline and the
+  right answer for a single query even at scale (scan is embarrassingly
+  parallel; only k rows per batch shuffle).  ``cosine_topk_batch`` is the
+  same pass for a batch of queries.
 * ``lsh_bucket_topk`` — random-hyperplane LSH scale path: sign-bit sketch
   per vector, candidates share the query's bucket (optionally within
-  Hamming distance h), exact rerank only on candidates.  Trades recall for
-  a ~2^bits scan reduction — the 100 TB path for query batches.
+  Hamming distance h), exact ``cosine_topk`` only on candidates.  Trades
+  recall for a ~2^bits scan reduction — the 100 TB path for query batches.
 * ``cosine_pairs``   — near-dup by embedding: all pairs with cosine ≥ t,
   LSH-bucketed self-join so the shuffle key is the sketch, not the vector.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.window import Window
+
+from logshipper_spark.sources.local import local_table
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _vectors(arr: pa.ListArray, d: int) -> tuple[np.ndarray, np.ndarray]:
+    """(matrix, rows): the float64 n×d matrix of the rows of ``arr`` whose
+    vector is non-NULL, has no NULL element and has length ``d``, and
+    those rows' indices in ascending order.  Every other row is left out,
+    so its caller gives it a NULL similarity.  One ``take`` and one
+    ``flatten`` over the Arrow list buffers, no per-row Python."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    rows = np.flatnonzero(pc.list_value_length(arr).fill_null(-1).to_numpy() == d)
+    vals = arr.take(rows).flatten()
+    m = vals.to_numpy(zero_copy_only=False).astype(np.float64).reshape(len(rows), d)
+    if vals.null_count:
+        ok = ~vals.is_null().to_numpy(zero_copy_only=False).reshape(len(rows), d).any(axis=1)
+        rows, m = rows[ok], m[ok]
+    return m, rows
+
+
+def _lengths(arr: pa.ListArray) -> np.ndarray:
+    """The distinct lengths of the non-NULL vectors in ``arr``."""
+    return np.unique(pc.list_value_length(arr).drop_null().to_numpy())
 
 
 def _norm(a: Column) -> Column:
@@ -32,12 +68,51 @@ def _norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
-
-
 def embedding_norms(df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id") -> DataFrame:
     return df.select(F.col(id_col), F.round(_norm(F.col(vec_col)), 6).alias("l2_norm"))
+
+
+def _local_topk(
+    df: DataFrame,
+    queries: list[tuple[int, list[float]]],
+    k: int,
+    vec_col: str,
+    id_col: str,
+) -> DataFrame:
+    """(q_id, id_col, cosine_sim): each Arrow batch's own top-k rows per
+    query.  The Q×d query matrix ships in the task closure; a batch
+    computes its batch×Q similarity matrix as ONE numpy matmul and keeps
+    k rows per query under the SAME total order as the global rank
+    (cosine rounded to 6 desc with NULLs last, id asc), so boundary ties
+    stay exact."""
+    q_ids = [int(q) for q, _ in queries]
+    Q = np.asarray([v for _, v in queries], dtype=np.float64)  # Q×d
+    Qn = np.linalg.norm(Q, axis=1)
+    tid = df.schema[id_col].dataType.simpleString()
+
+    def run(batches):
+        for b in batches:
+            ids = b.column(0)
+            m, rows = _vectors(b.column(1), Q.shape[1])
+            sims = np.full((b.num_rows, len(q_ids)), np.nan)  # NaN → NULL
+            sims[rows] = np.round(
+                (m @ Q.T) / (np.linalg.norm(m, axis=1)[:, None] * Qn[None, :]), 6
+            )
+            for j, qid in enumerate(q_ids):
+                s = pa.array(sims[:, j], from_pandas=True)
+                top = pc.sort_indices(
+                    pa.table({"s": s, "id": ids}),
+                    sort_keys=[("s", "descending"), ("id", "ascending")],
+                    null_placement="at_end",
+                )[:k]
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([qid] * len(top), pa.int64()), ids.take(top), s.take(top)],
+                    names=["q_id", id_col, "cosine_sim"],
+                )
+
+    return df.select(id_col, vec_col).mapInArrow(
+        run, f"q_id long, {id_col} {tid}, cosine_sim double"
+    )
 
 
 def cosine_topk(
@@ -47,18 +122,13 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k by cosine similarity to ``query``.
+    """Exact top-k by cosine similarity to ``query``: (id_col, cosine_sim).
 
-    The query ships as a literal array (broadcast with the plan); the scan
-    computes one double per row; ``orderBy().limit(k)`` lowers to
-    TakeOrderedAndProject — per-partition top-k then a k-row merge on the
-    driver, no full sort shuffle.
+    Each Arrow batch keeps its local top-k (``_local_topk``);
+    ``orderBy().limit(k)`` lowers to TakeOrderedAndProject — per-partition
+    top-k then a k-row merge on the driver, no full sort shuffle.
     """
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = df.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"),
-    )
+    scored = _local_topk(df, [(0, query)], k, vec_col, id_col).select(id_col, "cosine_sim")
     return scored.orderBy(F.desc("cosine_sim"), F.asc(id_col)).limit(k)
 
 
@@ -73,54 +143,21 @@ def cosine_topk_batch(
     pipeline needs (dedupe a candidate set against Q probe vectors, retrieve
     neighbors for Q seed docs) without Q separate scans.
 
-    Plan shape: the Q×d query matrix ships in the task closure (small,
-    broadcast with the plan); each Arrow batch computes the full
-    batch×queries similarity matrix as ONE numpy matmul and emits only its
-    LOCAL top-k rows per query (≤ Q·k rows per batch).  The final global
-    window then ranks ≤ Q·k·n_batches pre-pruned rows — the shuffle carries
-    candidates, never the corpus.  Returns (q_id, vec_id, cosine_sim, rk).
+    Plan shape: ``_local_topk`` emits ≤ Q·k rows per Arrow batch; the
+    final window ranks ≤ Q·k·n_batches pre-pruned rows — the shuffle
+    carries candidates, never the corpus.  Returns (q_id, id_col,
+    cosine_sim, rk).
     """
-    import numpy as np
-
-    q_ids = [int(q) for q, _ in queries]
-    Q = np.stack([np.asarray(v, dtype=np.float64) for _, v in queries])  # Q×d
-    Qn = np.linalg.norm(Q, axis=1)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            sims = (M @ Q.T) / (np.linalg.norm(M, axis=1)[:, None] * Qn[None, :])
-            ids = pdf[id_col].to_numpy()
-            out_q, out_id, out_s = [], [], []
-            top = min(k, len(ids))
-            for j, qid in enumerate(q_ids):
-                # local prune under the SAME total order as the global rank
-                # (rounded sim desc, id asc) — boundary ties stay exact
-                r = np.round(sims[:, j], 6)
-                idx = np.lexsort((ids, -r))[:top]
-                out_q.extend([qid] * top)
-                out_id.extend(ids[idx])
-                out_s.extend(r[idx])
-            yield pd.DataFrame({"q_id": out_q, id_col: out_id, "cosine_sim": out_s})
-
-    from pyspark.sql.window import Window
-
-    scored = df.select(id_col, vec_col).mapInPandas(
-        run, f"q_id long, {id_col} long, cosine_sim double"
-    )
     w = Window.partitionBy("q_id").orderBy(F.desc("cosine_sim"), F.asc(id_col))
     return (
-        scored.withColumn("rk", F.row_number().over(w).cast("int"))
+        _local_topk(df, queries, k, vec_col, id_col)
+        .withColumn("rk", F.row_number().over(w).cast("int"))
         .where(F.col("rk") <= k)
         .select("q_id", id_col, "cosine_sim", "rk")
     )
 
 
-def pairwise_cosine_pandas(
+def pairwise_cosine(
     pairs: DataFrame,
     va_col: str = "va",
     vb_col: str = "vb",
@@ -128,47 +165,38 @@ def pairwise_cosine_pandas(
 ) -> DataFrame:
     """Exact cosine for (id_a, id_b, va, vb) candidate rows via ONE numpy
     pass per Arrow batch — the vectorized replacement for the interpreted
-    ``cosine()`` column form on pair streams (HOF lambdas evaluate per
-    ELEMENT: 64 interpreted evals per dim per pair; measured 20×+ on
-    dup-heavy candidate sets).  Returns (id_a, id_b, out_col) with the
-    RAW double — callers round Spark-side (F.round) so the
-    rounding/parity convention stays in one place.  float64 throughout,
-    same convention as cosine_topk_batch/embedding_decontam (both
-    oracle-exact against DuckDB ::DOUBLE[] math).
+    column-form cosine on pair streams (HOF lambdas evaluate per ELEMENT:
+    64 interpreted evals per dim per pair; measured 20×+ on dup-heavy
+    candidate sets).  Returns (id_a, id_b, out_col) with the RAW double —
+    callers round Spark-side (F.round) so the rounding/parity convention
+    stays in one place.  float64 throughout, same convention as
+    cosine_topk/embedding_decontam (both oracle-exact against DuckDB
+    ::DOUBLE[] math).
 
-    A pair with a NULL vector, or with vectors of different lengths, gets
-    a NULL cosine, as the column form gives; the batch never fails on it.
-    Vectors of one length are stacked together, so a batch may mix
-    dimensions."""
-    import numpy as np
+    A pair whose sides differ in length, or with a NULL vector or element,
+    gets a NULL cosine.  Pairs of one length are computed together, so a
+    batch may mix dimensions."""
 
     def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            dims = np.array([
-                -1 if va is None or vb is None or len(va) != len(vb) else len(va)
-                for va, vb in zip(pdf[va_col], pdf[vb_col])
-            ])
-            cos = np.full(len(pdf), np.nan)  # NaN → NULL on the Arrow side
-            for d in np.unique(dims[dims >= 0]):
-                rows = np.nonzero(dims == d)[0]
-                A = np.stack([np.asarray(pdf[va_col].iat[i], dtype=np.float64) for i in rows])
-                B = np.stack([np.asarray(pdf[vb_col].iat[i], dtype=np.float64) for i in rows])
+        for b in batches:
+            va, vb = b.column(2), b.column(3)
+            cos = np.full(b.num_rows, np.nan)  # NaN → NULL
+            for d in _lengths(va):
+                A, ra = _vectors(va, d)
+                B, rb = _vectors(vb, d)
+                rows, ia, ib = np.intersect1d(ra, rb, assume_unique=True, return_indices=True)
+                A, B = A[ia], B[ib]
                 cos[rows] = (A * B).sum(axis=1) / (
                     np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
                 )
-            yield pd.DataFrame(
-                {"id_a": pdf["id_a"], "id_b": pdf["id_b"], out_col: cos}
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), b.column(1), pa.array(cos, from_pandas=True)],
+                names=["id_a", "id_b", out_col],
             )
 
-    # id types derived from the input, not hardcoded long — string or int
-    # pair ids pass through unchanged (review r6)
     ta = pairs.schema["id_a"].dataType.simpleString()
     tb = pairs.schema["id_b"].dataType.simpleString()
-    return pairs.select("id_a", "id_b", va_col, vb_col).mapInPandas(
+    return pairs.select("id_a", "id_b", va_col, vb_col).mapInArrow(
         run, f"id_a {ta}, id_b {tb}, {out_col} double"
     )
 
@@ -198,11 +226,11 @@ def blocked_cosine_pairs(
     per-task block residency the join's build side needs.  Blocks too
     large for that belong to the LSH path (``cosine_pairs``), exactly as
     before.  Zero-norm vectors divide to NaN and drop at the threshold,
-    matching the column form's behavior.  Rows with a NULL block key are
-    excluded up front: the join form's ``a.block = b.block`` is
+    and a NULL vector or element drops too; vectors pair only with the
+    block's vectors of their own length — the column form's NULL cosine
+    fails the threshold in every such case.  Rows with a NULL block key
+    are excluded up front: the join form's ``a.block = b.block`` is
     NULL-false, so NULL-keyed rows never pair there either (review r6)."""
-    import numpy as np
-
     # guard band = one full rounding quantum (1e-6), NOT a ulp: F.round
     # is HALF_UP, so a raw cosine as low as threshold - 5e-7 still rounds
     # UP past the threshold — the kernel must emit every candidate the
@@ -210,73 +238,37 @@ def blocked_cosine_pairs(
     # band silently dropped raws in [thr-5e-7, thr-1e-9))
     thr = float(threshold) - 1e-6
 
-    def part(key, pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        ids = pdf[id_col].to_numpy()
-        M = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        n = np.linalg.norm(M, axis=1)
-        out_a, out_b, out_c = [], [], []
-        for i0 in range(0, len(ids), strip):
-            i1 = min(i0 + strip, len(ids))
-            C = (M[i0:i1] @ M.T) / (n[i0:i1, None] * n[None, :])
-            for r in range(i0, i1):
-                row = C[r - i0]
-                js = np.nonzero(row[r + 1:] >= thr)[0] + r + 1
-                if js.size:
-                    out_a.extend([ids[r]] * js.size)
-                    out_b.extend(ids[js])
-                    out_c.extend(row[js])
-        # the id column's own dtype (int64, or object for strings), so an
-        # empty pair set (e.g. a 1-row block) still converts to the
-        # declared id type
-        return pd.DataFrame({
-            "id_a": np.asarray(out_a, dtype=ids.dtype),
-            "id_b": np.asarray(out_b, dtype=ids.dtype),
-            "cosine_sim": np.asarray(out_c, dtype=np.float64),
+    def part(t):
+        t = t.sort_by(id_col)
+        ids, vecs = t.column(id_col), t.column(vec_col)
+        ia, ib, cs = [np.empty(0, np.int64)], [np.empty(0, np.int64)], [np.empty(0)]
+        for d in _lengths(vecs):
+            M, rows = _vectors(vecs, d)
+            n = np.linalg.norm(M, axis=1)
+            for i0 in range(0, len(rows), strip):
+                C = (M[i0:i0 + strip] @ M.T) / (n[i0:i0 + strip, None] * n[None, :])
+                r, j = np.nonzero(C >= thr)
+                keep = j > r + i0  # upper triangle: id_a < id_b
+                r, j = r[keep], j[keep]
+                ia.append(rows[r + i0])
+                ib.append(rows[j])
+                cs.append(C[r, j])
+        return pa.table({
+            "id_a": ids.take(np.concatenate(ia)),
+            "id_b": ids.take(np.concatenate(ib)),
+            "cosine_sim": np.concatenate(cs),
         })
 
-    # id type derived from the input, as pairwise_cosine_pandas does
     tid = df.schema[id_col].dataType.simpleString()
     cand = (
         df.select(id_col, block_col, vec_col)
         .where(F.col(block_col).isNotNull())
         .groupBy(block_col)
-        .applyInPandas(part, f"id_a {tid}, id_b {tid}, cosine_sim double")
+        .applyInArrow(part, f"id_a {tid}, id_b {tid}, cosine_sim double")
     )
     return cand.select(
         "id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim")
     ).where(F.col("cosine_sim") >= float(threshold))
-
-
-def hyperplane_sketch(vec_col: Column, bits: int = 16, dim: int = 64, seed: int = 11) -> Column:
-    """Random-hyperplane sign sketch: bit b = sign(v · r_b) where r_b is a
-    deterministic pseudo-random hyperplane derived from xxhash64(seed,b,i).
-    Pure column expressions — reproducible across engines and runs."""
-
-    def component(b: Column, i: Column) -> Column:
-        # uniform in [-1, 1) from a 64-bit hash
-        h = F.xxhash64(F.lit(seed), b, i)
-        return (F.pmod(h, F.lit(2_000_000)).cast("double") / 1_000_000.0) - 1.0
-
-    def bit(b):
-        bcol = F.lit(b)
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                lambda v, i: v.cast("double") * component(bcol, i),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot >= 0, F.shiftleft(F.lit(1).cast("long"), b)).otherwise(F.lit(0).cast("long"))
-
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out + bit(b)
-    return out
 
 
 def hyperplane_sketches(
@@ -286,9 +278,10 @@ def hyperplane_sketches(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """(id, vec, sketch) via posexplode + codegen'd dot-product aggregates —
-    the scale path for sketching (the Column form pays interpreted-lambda
-    cost per bit × dim).
+    """(id, vec, sketch): random-hyperplane sign sketch via posexplode +
+    codegen'd dot-product aggregates.  Bit b = sign(v · r_b) where r_b is a
+    deterministic pseudo-random hyperplane derived from xxhash64(seed, b,
+    i) — reproducible across engines and runs.
 
     Per (id, i, v) row each of the B aggregates adds ``v * r_b[i]`` where
     the hyperplane component is xxhash-derived inline; sign bits assemble
@@ -317,6 +310,14 @@ def hyperplane_sketches(
     return dots.select("id", sketch.alias("sketch")).join(vecs, "id").select("id", "v", "sketch")
 
 
+def _query_sketch(spark, query: list[float], bits: int, seed: int = 11) -> int:
+    """The query's sketch: ``hyperplane_sketches`` itself over a one-row
+    local table — one tiny job, and the same arithmetic as the scan side,
+    so a stored vector used as the query lands in its own bucket."""
+    q = local_table(spark, [(0, [float(x) for x in query])], "id long, v array<double>")
+    return hyperplane_sketches(q, bits=bits, seed=seed, vec_col="v", id_col="id").first()["sketch"]
+
+
 def lsh_bucket_topk(
     df: DataFrame,
     query: list[float],
@@ -333,20 +334,11 @@ def lsh_bucket_topk(
     partitioned on), so the probe prunes partitions instead of filtering
     rows; here it's computed inline for self-containedness.
     """
-    dim = len(query)
     sk = hyperplane_sketches(df, bits=bits, vec_col=vec_col, id_col=id_col)
-    # query sketch: the SAME arithmetic over a one-row literal — one tiny
-    # job, guaranteed parity with the scan side
-    spark = df.sparkSession
-    qarr = F.array(*[F.lit(float(x)) for x in query])
-    qsk = spark.range(1).select(hyperplane_sketch(qarr, bits=bits, dim=dim).alias("s")).first()["s"]
+    qsk = _query_sketch(df.sparkSession, query, bits)
     cand = sk.where(F.bit_count(F.col("sketch").bitwiseXOR(F.lit(qsk))) <= hamming)
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        cand.select(F.col("id").alias(id_col), F.round(cosine(F.col("v"), q), 6).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = cand.select(F.col("id").alias(id_col), F.col("v").alias(vec_col))
+    return cosine_topk(cand, query, k, vec_col, id_col)
 
 
 def auto_sketch_bits(n_rows: int, target_bucket: int = 8) -> int:
@@ -400,13 +392,7 @@ def lsh_topk_pruned(
     driver-side set: sum of C(bits, d)) and filter on the PARTITION column —
     the scan plan prunes to those directories, reading a ~2^bits-th of the
     table per probed bucket.  Exact cosine rerank on the survivors."""
-    dim = len(query)
-    qarr = F.array(*[F.lit(float(x)) for x in query])
-    qsk = (
-        spark.range(1)
-        .select(hyperplane_sketch(qarr, bits=bits, dim=dim, seed=seed).alias("s"))
-        .first()["s"]
-    )
+    qsk = _query_sketch(spark, query, bits, seed)
     # enumerate sketches within hamming distance (bits choose ≤h values)
     from itertools import combinations
 
@@ -417,14 +403,8 @@ def lsh_topk_pruned(
             for b in flip:
                 v ^= 1 << b
             probe.append(v)
-    t = spark.read.parquet(path)
-    cand = t.where(F.col("sketch").isin(probe))
-    q = F.array(*[F.lit(float(x)) for x in query])
-    return (
-        cand.select(F.col(id_col), F.round(cosine(F.col(vec_col), q), 6).alias("cosine_sim"))
-        .orderBy(F.desc("cosine_sim"), F.asc(id_col))
-        .limit(k)
-    )
+    cand = spark.read.parquet(path).where(F.col("sketch").isin(probe))
+    return cosine_topk(cand, query, k, vec_col, id_col)
 
 
 def cosine_pairs(
@@ -490,12 +470,12 @@ def cosine_pairs(
                 F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
             )
         cand = t_pairs if cand is None else cand.unionByName(t_pairs)
-    # vectorized exact verify (r6): the interpreted cosine() column form
+    # vectorized exact verify (r6): the interpreted column-form cosine
     # pays per-element HOF evals on every candidate pair — the dominant
     # cost on dup-heavy corpora; differentially verified equal at 6
     # places over 212k pairs
     return (
-        pairwise_cosine_pandas(cand.dropDuplicates(["id_a", "id_b"]))
+        pairwise_cosine(cand.dropDuplicates(["id_a", "id_b"]))
         .select("id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim"))
         .where(F.col("cosine_sim") >= threshold)
     )
@@ -572,8 +552,6 @@ class IVFIndex:
         import json
         import os
 
-        import numpy as np
-
         from logshipper_spark.sources.metafs import get_metafs
 
         centers = [
@@ -584,8 +562,6 @@ class IVFIndex:
         return cls(centers, assigned, vec_col, id_col)
 
     def probe_cells(self, query: list[float], n_probe: int) -> list[int]:
-        import numpy as np
-
         q = np.asarray(query, dtype=np.float64)
         centers = self.centers
         by_dist = sorted(range(len(centers)), key=lambda c: float(np.linalg.norm(centers[c] - q)))
@@ -595,15 +571,7 @@ class IVFIndex:
         """Probe the ``n_probe`` cells nearest the query, exact rerank —
         NO refit: reuses the trained quantizer and precomputed assignments."""
         cand = self.assigned.where(F.col("cell").isin(self.probe_cells(query, n_probe)))
-        qcol = F.array(*[F.lit(float(x)) for x in query])
-        return (
-            cand.select(
-                F.col(self.id_col),
-                F.round(cosine(F.col(self.vec_col), qcol), 6).alias("cosine_sim"),
-            )
-            .orderBy(F.desc("cosine_sim"), F.asc(self.id_col))
-            .limit(k)
-        )
+        return cosine_topk(cand, query, k, self.vec_col, self.id_col)
 
 
 def ivf_topk(
@@ -643,51 +611,54 @@ def embedding_decontam(
     Scale shape: the benchmark side is collected to ONE dense matrix
     (benchmark suites are bounded — same assumption as the cached
     ``_bench_grams`` broadcast in curation) and closure-shipped into an
-    Arrow ``mapInPandas`` pass over train: one scan, one BLAS matmul per
+    Arrow ``mapInArrow`` pass over train: one scan, one BLAS matmul per
     batch, no join, no shuffle.  For a benchmark too large to collect,
     fall back to ``cosine_pairs`` (LSH-bucketed, multi-table) over the
     union — precision-identical, recall-bounded.
 
+    NULL bench vectors (or ones with a NULL element) are dropped, as
+    zero-norm ones are; a bench side of mixed lengths raises
+    ``ValueError``.  A train vector that is NULL, has a NULL element or
+    differs in length from the bench gets a NULL max_cos, as does every
+    train vector when no bench vector is left (the max over an empty set),
+    so none of them is reported.
+
     Returns ``(id_col, max_cos)`` filtered to ``max_cos >= threshold``
     (rounding happens Spark-side with F.round for cross-engine parity).
     """
-    import numpy as np
-
-    b_rows = bench.select(vec_col).collect()
-    bm = np.array([list(r[0]) for r in b_rows], dtype=np.float64)
-    if bm.size:
-        bn = np.linalg.norm(bm, axis=1, keepdims=True)
-        # drop zero-norm (corrupt) benchmark rows instead of letting the
-        # division produce a NaN row: one NaN in bm makes (mn @ bm.T)
-        # NaN for EVERY train row and 'NaN >= threshold' is False — the
-        # whole decontamination pass silently flags nothing (r5 advice,
-        # pinned in tests).  A zero vector can't semantically match
-        # anything, so dropping it is the correct behavior.
-        keep_rows = bn.ravel() > 0.0
-        bm = bm[keep_rows] / bn[keep_rows]
-    out_schema = f"{id_col} long, max_cos double"
+    bvecs = bench.select(vec_col).toArrow().column(0)
+    dims = _lengths(bvecs)
+    if len(dims) > 1:
+        raise ValueError(f"embedding_decontam: bench vectors have lengths {dims.tolist()}")
+    bm, _ = _vectors(bvecs, dims[0] if len(dims) else 0)
+    bn = np.linalg.norm(bm, axis=1, keepdims=True)
+    # drop zero-norm (corrupt) benchmark rows instead of letting the
+    # division produce a NaN row: one NaN in bm makes (mn @ bm.T) NaN for
+    # EVERY train row and 'NaN >= threshold' is False — the whole
+    # decontamination pass silently flags nothing (r5 advice, pinned in
+    # tests).  A zero vector can't semantically match anything, so
+    # dropping it is the correct behavior.
+    keep_rows = bn.ravel() > 0.0
+    bm = bm[keep_rows] / bn[keep_rows]
+    tid = train.schema[id_col].dataType.simpleString()
 
     def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if bm.size:
+        for b in batches:
+            mx = np.full(b.num_rows, np.nan)  # NaN → NULL
+            if len(bm):
+                m, rows = _vectors(b.column(1), bm.shape[1])
                 # zero-norm train rows: normalize by 1 → zero vector →
                 # max_cos 0.0 (deterministic, below any real threshold),
                 # never a NaN that poisons the comparison
                 nrm = np.linalg.norm(m, axis=1, keepdims=True)
-                mn = m / np.where(nrm > 0.0, nrm, 1.0)
-                mx = (mn @ bm.T).max(axis=1)
-            else:
-                mx = np.full(len(pdf), -1.0)
-            yield pd.DataFrame({id_col: pdf[id_col], "max_cos": mx})
+                mx[rows] = ((m / np.where(nrm > 0.0, nrm, 1.0)) @ bm.T).max(axis=1)
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array(mx, from_pandas=True)], names=[id_col, "max_cos"]
+            )
 
     return (
         train.select(id_col, vec_col)
-        .mapInPandas(run, out_schema)
+        .mapInArrow(run, f"{id_col} {tid}, max_cos double")
         .select(id_col, F.round("max_cos", 6).alias("max_cos"))
         .where(F.col("max_cos") >= float(threshold))
     )
@@ -747,38 +718,40 @@ def cluster_assign(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Nearest-centroid assignment by cosine: one Arrow-batched numpy
-    matmul per partition against the K×d centroid matrix (ships in the
-    task closure — small, broadcast with the plan), argmax per row with
-    ties broken toward the LOWEST centroid index (numpy argmax picks the
-    first maximum; similarities are rounded to 6 places first so two
-    engines agree on what "tied" means).  Embarrassingly parallel — no
-    shuffle; K·d work per row."""
-    import numpy as np
-    import pandas as pd
-
+    """Nearest-centroid assignment by cosine: one numpy matmul per Arrow
+    batch against the K×d centroid matrix (ships in the task closure —
+    small, broadcast with the plan), argmax per row with ties broken
+    toward the LOWEST centroid index (numpy argmax picks the first
+    maximum; similarities are rounded to 6 places first so two engines
+    agree on what "tied" means).  Embarrassingly parallel — no shuffle;
+    K·d work per row.  A vector that is NULL, has a NULL element or
+    differs in length from the centroids gets a NULL cluster_id and sim.
+    Returns (id_col, cluster_id, sim)."""
     c = np.asarray(centroids, dtype=np.float64)
     cn = np.linalg.norm(c, axis=1)
-    out_schema = f"{id_col} long, cluster_id int, sim double"
+    tid = df.schema[id_col].dataType.simpleString()
 
     def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        for b in batches:
+            m, rows = _vectors(b.column(1), c.shape[1])
             sims = np.round(
                 (m @ c.T) / (np.linalg.norm(m, axis=1)[:, None] * cn[None, :]), 6
             )
             best = sims.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cluster_id": best.astype("int32"),
-                    "sim": sims[np.arange(len(best)), best],
-                }
+            cid = np.zeros(b.num_rows, np.int32)
+            sim = np.full(b.num_rows, np.nan)  # NaN → NULL
+            cid[rows] = best
+            sim[rows] = sims[np.arange(len(rows)), best]
+            missing = np.ones(b.num_rows, bool)
+            missing[rows] = False
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0), pa.array(cid, mask=missing), pa.array(sim, from_pandas=True)],
+                names=[id_col, "cluster_id", "sim"],
             )
 
-    return df.select(id_col, vec_col).mapInPandas(run, out_schema)
+    return df.select(id_col, vec_col).mapInArrow(
+        run, f"{id_col} {tid}, cluster_id int, sim double"
+    )
 
 
 def cluster_mixture(

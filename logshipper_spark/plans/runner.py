@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from logshipper_spark.operators.route import sink_rows, write_bucketed
 from logshipper_spark.plans.spec import Pipeline
+from logshipper_spark.sources.local import local_table
 
 
 @dataclass
@@ -139,7 +140,8 @@ class CheckpointedRunner:
         finally:
             cached.unpersist()
             if lineage_rows:
-                lineage = self.spark.createDataFrame(
+                lineage = local_table(
+                    self.spark,
                     lineage_rows,
                     "snapshot_id string, sink string, bucket int, rows bigint, "
                     "wall_ms bigint, completed_at timestamp",

@@ -4,6 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from logshipper_spark.functions import dedup, multimodal, similarity, textstats
+from logshipper_spark.sources.local import local_table
 
 
 def ngram_array_expr(col, n: int):
@@ -17,6 +18,20 @@ def ngram_array_expr(col, n: int):
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
     grams = F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
     return F.when(col.isNotNull(), grams)
+
+
+def cosine(a, b):
+    """Cosine as a pure JVM expression — the row-for-row reference for the
+    Arrow vector kernels in ``similarity``.  Too slow for a hot path: the
+    ``zip_with``/``aggregate`` lambdas are interpreted per element.  A NULL
+    vector or element, or a length mismatch (``zip_with`` pads the shorter
+    side with NULL), gives NULL — the kernels' input contract."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    return dot / (similarity._norm(a) * similarity._norm(b))
 
 
 @pytest.fixture(scope="module")
@@ -253,6 +268,114 @@ class TestSimilarity:
         # identical-angle vectors must be found
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert (0, 10) in got
+
+
+_BASE = [(i, [float((i * 3) % 5) - 2, float((i * 7) % 4) - 1, 1.0, float(i % 3)]) for i in range(20)]
+_BAD = {"null_vector": None, "null_element": [1.0, None, 0.0, 0.0], "ragged": [1.0, 0.0, 0.0]}
+_QUERIES = [[1.0, 0.0, 1.0, 0.0], [0.0, 1.0, 0.0, 1.0], [-1.0, 0.0, 0.5, 0.0]]
+
+
+def _ref_cosines(left, right):
+    """{(left id, right id): round(cosine, 6)} over left × right by the
+    column-form reference."""
+    a, b = left.alias("a"), right.alias("b")
+    sims = a.crossJoin(b).select(
+        "a.vec_id", "b.vec_id",
+        F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6),
+    )
+    return {(r[0], r[1]): r[2] for r in sims.collect()}
+
+
+class TestVectorKernelContract:
+    @pytest.mark.parametrize(
+        "case", ["null_vector", "null_element", "ragged", "empty", "float_input", "string_ids"]
+    )
+    def test_kernel_matrix(self, spark, case):
+        """One input contract for cosine_topk and the five Arrow vector
+        kernels.  On the clean rows every output equals the column-form
+        reference; a NULL vector, a NULL element or a ragged vector gets a
+        NULL similarity ranked last, or is absent from pair and threshold
+        outputs; an empty frame gives no rows; ids keep their input type.
+        Nothing raises, except embedding_decontam on a ragged bench side."""
+        key = (lambda i: f"v{i:02d}") if case == "string_ids" else (lambda i: i)
+        ddl = (f"vec_id {'string' if case == 'string_ids' else 'long'}, "
+               f"embedding array<{'float' if case == 'float_input' else 'double'}>")
+        good = [] if case == "empty" else [(key(i), v) for i, v in _BASE]
+        bad = [(key(90), _BAD[case])] if case in _BAD else []
+        # JVM-local frames: a Python-RDD frame makes every self join a
+        # cartesian of Python-worker scans
+        clean = local_table(spark, good, ddl).withColumn("label", F.lit("x"))
+        df = local_table(spark, good + bad, ddl).withColumn("label", F.lit("x"))
+        id_type = df.schema["vec_id"].dataType
+        ids = sorted(i for i, _ in good)
+        queries = local_table(spark, list(enumerate(_QUERIES)), "vec_id long, embedding array<double>")
+        ref_q = _ref_cosines(clean, queries)
+        ref = _ref_cosines(clean, clean)
+        nulls = [(i, None) for i, _ in bad]
+
+        def ranked(j):
+            return sorted(((i, ref_q[(i, j)]) for i in ids), key=lambda t: (-t[1], t[0]))
+
+        # exact top-k: the bad row ranks last with a NULL similarity
+        top = similarity.cosine_topk(df, _QUERIES[0], k=len(good) + len(bad))
+        assert top.schema["vec_id"].dataType == id_type
+        assert [tuple(r) for r in top.collect()] == ranked(0) + nulls
+
+        batch = similarity.cosine_topk_batch(df, list(enumerate(_QUERIES[:2])), k=5)
+        assert batch.schema["vec_id"].dataType == id_type
+        assert {(r["q_id"], r["rk"]): (r["vec_id"], r["cosine_sim"]) for r in batch.collect()} == {
+            (j, rk + 1): t for j in (0, 1) for rk, t in enumerate(ranked(j)[:5])
+        }
+
+        # pair cosine: a pair with the bad row gets NULL
+        a, b = df.alias("a"), df.alias("b")
+        pairs = a.join(b, F.col("a.vec_id") < F.col("b.vec_id")).select(
+            F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"),
+            F.col("a.embedding").alias("va"), F.col("b.embedding").alias("vb"),
+        )
+        pc = similarity.pairwise_cosine(pairs)
+        assert pc.schema["id_a"].dataType == pc.schema["id_b"].dataType == id_type
+        got = {(r[0], r[1]): r[2] for r in pc.select(
+            "id_a", "id_b", F.round("cosine_sim", 6)).collect()}
+        want = {(x, y): ref[(x, y)] for x in ids for y in ids if x < y}
+        want.update({(min(x, y), max(x, y)): None for x in ids for y, _ in bad})
+        assert got == want
+
+        # threshold outputs: the bad row is absent
+        blocked = similarity.blocked_cosine_pairs(df, "label", 0.0)
+        assert blocked.schema["id_a"].dataType == id_type
+        assert {tuple(r) for r in blocked.collect()} == {
+            (x, y, ref[(x, y)]) for x in ids for y in ids if x < y and ref[(x, y)] >= 0.0
+        }
+
+        def decontam_ok(got, train_ids, bench_ids):
+            want = {t: max(ref[(t, u)] for u in bench_ids) for t in train_ids}
+            want = {t: m for t, m in want.items() if m >= 0.0}
+            assert set(got) == set(want)
+            assert all(abs(got[t] - want[t]) < 2e-6 for t in want)
+
+        train_side = {r["vec_id"]: r["max_cos"] for r in similarity.embedding_decontam(
+            df, clean.where(F.col("vec_id").isin(ids[:3])), threshold=0.0).collect()}
+        decontam_ok(train_side, ids, ids[:3])
+        bench = df.where(~F.col("vec_id").isin(ids[:5]))
+        train = clean.where(F.col("vec_id").isin(ids[:5]))
+        if case == "ragged":
+            with pytest.raises(ValueError, match=r"lengths \[3, 4\]"):
+                similarity.embedding_decontam(train, bench, threshold=0.0)
+        else:
+            bench_side = {r["vec_id"]: r["max_cos"] for r in
+                          similarity.embedding_decontam(train, bench, threshold=0.0).collect()}
+            decontam_ok(bench_side, ids[:5], ids[5:])
+
+        assign = similarity.cluster_assign(df, _QUERIES)
+        assert assign.schema["vec_id"].dataType == id_type
+        want = {}
+        for i in ids:
+            sims = [ref_q[(i, j)] for j in range(len(_QUERIES))]
+            best = sims.index(max(sims))  # ties → lowest index
+            want[i] = (best, sims[best])
+        want.update({i: (None, None) for i, _ in bad})
+        assert {r[0]: (r[1], r[2]) for r in assign.collect()} == want
 
 
 class TestTextstats:
@@ -566,21 +689,17 @@ class TestSignaturePaths:
         got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
         assert {(0, 1), (0, 2), (1, 2)} <= got
 
-    def test_hyperplane_column_and_df_paths_agree(self, spark):
-        emb = spark.createDataFrame(
-            [(i, [float(i % 7) - 3, float(i % 5) - 2, 1.0, -0.5]) for i in range(30)],
-            "vec_id long, embedding array<double>",
-        )
-        from logshipper_spark.functions.similarity import hyperplane_sketch, hyperplane_sketches
-
-        a = {
-            r["vec_id"]: r["s"]
-            for r in emb.select(
-                "vec_id", hyperplane_sketch(F.col("embedding"), bits=8, dim=4).alias("s")
-            ).collect()
-        }
-        b = {r["id"]: r["sketch"] for r in hyperplane_sketches(emb, bits=8).collect()}
-        assert a == b
+    @pytest.mark.parametrize("seed", [11, 108])
+    def test_query_sketch_matches_table_sketch(self, spark, seed):
+        """A stored vector used as the query sketches into its own bucket:
+        ``_query_sketch`` of every row's vector equals that row's
+        ``hyperplane_sketches`` value."""
+        rows = [(i, [float(i % 7) - 3, float(i % 5) - 2, 1.0, -0.5 + i / 30]) for i in range(30)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        table = {r["id"]: r["sketch"]
+                 for r in similarity.hyperplane_sketches(emb, bits=8, seed=seed).collect()}
+        vecs = {r["vec_id"]: r["embedding"] for r in emb.collect()}
+        assert {i: similarity._query_sketch(spark, v, 8, seed) for i, v in vecs.items()} == table
 
 
 class TestAsofJoin:
@@ -770,9 +889,7 @@ class TestIVF:
         # pruning proof: the probe reads fewer files than the full table
         all_files = spark.read.parquet(path).select(
             F.input_file_name().alias("f")).distinct().count()
-        qsk = spark.range(1).select(
-            similarity.hyperplane_sketch(
-                F.array(*[F.lit(x) for x in q]), bits=6, dim=4).alias("s")).first()["s"]
+        qsk = similarity._query_sketch(spark, q, bits=6)
         probe_files = (
             spark.read.parquet(path)
             .where(F.col("sketch") == int(qsk))
@@ -892,7 +1009,6 @@ class TestEmbeddingDecontam:
                for r in embedding_decontam(train, bench, threshold=-1.0).collect()}
         # exact reference: blocked join + max, computed in Spark SQL
         a, b = train.alias("a"), bench.alias("b")
-        from logshipper_spark.functions.similarity import cosine
         want = {
             r["vec_id"]: r["mx"]
             for r in a.crossJoin(b)

@@ -26,6 +26,8 @@ from logshipper_spark.functions.similarity import embedding_decontam
 from logshipper_spark.operators import aggregate as agg
 from logshipper_spark.operators.asof import asof_join
 
+from test_functions import cosine
+
 
 class TestRollupPartitionOrderProof:
     def _run(self, df):
@@ -220,7 +222,7 @@ class TestBlockedCosinePairs:
                    & (F.col("a.vec_id") < F.col("b.vec_id")))
             .select(
                 F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"),
-                F.round(similarity.cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
+                F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 6)
                 .alias("cosine_sim"))
             .where(F.col("cosine_sim") >= 0.35)
         )
@@ -287,7 +289,7 @@ class TestR6ReviewFixes:
             "id_a long, id_b long, va array<double>, vb array<double>",
         ).coalesce(1)  # one Arrow batch holds every case
         got = {r["id_b"]: r["cosine_sim"]
-               for r in similarity.pairwise_cosine_pandas(pairs).collect()}
+               for r in similarity.pairwise_cosine(pairs).collect()}
         assert got[2] == pytest.approx(2 ** -0.5)
         assert got[3] is None and got[4] is None and got[5] is None
         assert got[6] == pytest.approx(1.0)

@@ -229,3 +229,28 @@ class TestIncremental:
                 got.groupBy("conv_id", "turn_idx").count().where(F.col("count") > 1).count()
                 == 0
             )
+
+
+def test_literal_frames_are_local_relations(spark, transcripts, tmp_path, monkeypatch):
+    """The runner's lineage rows and the curator's empty fingerprint and
+    histogram frames are JVM ``LocalRelation``s, never Python-RDD scans."""
+    from logshipper_spark.functions.curation import IncrementalCurator
+    from logshipper_spark.plans import runner
+
+    made = []
+    real = runner.local_table
+
+    def spy(*args):
+        made.append(real(*args))
+        return made[-1]
+
+    monkeypatch.setattr(runner, "local_table", spy)
+    CheckpointedRunner(spark, str(tmp_path / "ckpt")).run(
+        transcripts.limit(50), PIPE, SINKS3, str(tmp_path / "out"), snapshot_id="snapL"
+    )
+    bench = spark.createDataFrame([(0, "alpha beta gamma delta epsilon")], "doc_id long, text string")
+    with IncrementalCurator(spark, str(tmp_path / "cur"), bench) as cur:
+        made += [cur._seen_fingerprints(), cur._persisted_hist()]
+    assert len(made) == 3
+    for df in made:
+        assert df._jdf.queryExecution().analyzed().nodeName() == "LocalRelation"

@@ -41,7 +41,17 @@ CHECKS = {
         ("codegen project", r"\*\(\d+\) Project", True),
     ],
     # top-k lowers to TakeOrderedAndProject (per-partition top-k, no sort)
-    "ann_cosine_topk": [("TakeOrderedAndProject", r"TakeOrderedAndProject", True)],
+    # and every vector similarity runs in the Arrow kernels, never as an
+    # interpreted zip_with/aggregate lambda per element
+    "ann_cosine_topk": [
+        ("TakeOrderedAndProject", r"TakeOrderedAndProject", True),
+        ("no interpreted vector lambda", r"zip_with", False),
+    ],
+    "ann_cosine_topk_batch": [("no interpreted vector lambda", r"zip_with", False)],
+    "ann_lsh_topk": [("no interpreted vector lambda", r"zip_with", False)],
+    "ann_ivf_topk": [("no interpreted vector lambda", r"zip_with", False)],
+    "cosine_dup_pairs": [("no interpreted vector lambda", r"zip_with", False)],
+    "embedding_decontam": [("no interpreted vector lambda", r"zip_with", False)],
     # quantile-filter scale path: cutoff + scalar predicate, NO window and
     # NO single-partition global sort anywhere in the plan
     "quality_cutoff_filter": [
