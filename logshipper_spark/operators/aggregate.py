@@ -5,6 +5,10 @@ counters/gauges/timers per message and lets statsd fold them
 (``logshipper/outputs.py::prepare_statsd`` [approx 40-90]).  Columnar
 equivalents are plain hash aggregates: partial (map-side) + final combine,
 one shuffle on the group key, all built-in (SURVEY.md §2.4).
+
+The sinks return UNORDERED rows, like a statsd flush: a global ``orderBy``
+on a few dozen result rows costs a range-sampling job and a second shuffle
+per sink.  A caller that needs order sorts its own result.
 """
 
 from __future__ import annotations
@@ -12,10 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from logshipper_spark.operators.sqltext import sql_ident
+
 
 def turns_per_role(df: DataFrame) -> DataFrame:
     """Counter: one increment per message, grouped by role."""
-    return df.groupBy("role").agg(F.count("*").alias("n_turns")).orderBy("role")
+    return df.groupBy("role").agg(F.count("*").alias("n_turns"))
 
 
 def tool_invocations(df: DataFrame) -> DataFrame:
@@ -24,7 +30,6 @@ def tool_invocations(df: DataFrame) -> DataFrame:
         df.where(F.col("tool").isNotNull())
         .groupBy("tool")
         .agg(F.count("*").alias("n_calls"))
-        .orderBy("tool")
     )
 
 
@@ -33,7 +38,6 @@ def events_per_minute(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     return (
         df.groupBy(F.date_trunc("minute", F.col(ts_col)).alias("minute"))
         .agg(F.count("*").alias("n_events"))
-        .orderBy("minute")
     )
 
 
@@ -42,27 +46,21 @@ def timer_percentiles(df: DataFrame, value_col: str, group_col: str | None = Non
     """Timer distribution: p50/p90/p99 (+avg).  ``approx=True`` uses
     percentile_approx (the t-digest-style sketch — the 100 TB path);
     exact percentile is kept for oracle parity at test scale."""
-    fn = F.percentile_approx if approx else F.percentile
+    v = sql_ident(value_col)
     # ONE percentile aggregate with an array of percentages, not three:
-    # each exact-percentile aggregate buffers (and sorts) EVERY group
-    # value independently, so the single-call form holds one buffer per
-    # group instead of three and sorts it once — identical values (same
-    # function, same interpolation, same sorted buffer; r6, guide §1.2
-    # per-task work).  The array form is equally valid for the approx
-    # sketch path.
-    pcts = F.array(F.lit(0.5), F.lit(0.9), F.lit(0.99))
-    p = fn(F.col(value_col), pcts)
-    aggs = [
-        F.count("*").alias("n"),
-        F.round(F.avg(value_col), 6).alias("avg_v"),
-        F.round(F.element_at(p, 1).cast("double"), 6).alias("p50"),
-        F.round(F.element_at(p, 2).cast("double"), 6).alias("p90"),
-        F.round(F.element_at(p, 3).cast("double"), 6).alias("p99"),
-    ]
-    src = df.where(F.col(value_col).isNotNull())
-    if group_col:
-        return src.groupBy(group_col).agg(*aggs).orderBy(group_col)
-    return src.agg(*aggs)
+    # each exact-percentile aggregate buffers (and sorts) EVERY group value,
+    # so one call holds one buffer per group and sorts it once — identical
+    # values (r6).  Catalyst evaluates the repeated aggregate text once.
+    p = f"{'percentile_approx' if approx else 'percentile'}({v}, array(0.5D, 0.9D, 0.99D))"
+    aggs = [F.expr(e) for e in (
+        "count(*) AS n",
+        f"round(avg({v}), 6) AS avg_v",
+        f"round(CAST(element_at({p}, 1) AS DOUBLE), 6) AS p50",
+        f"round(CAST(element_at({p}, 2) AS DOUBLE), 6) AS p90",
+        f"round(CAST(element_at({p}, 3) AS DOUBLE), 6) AS p99",
+    )]
+    src = df.where(f"{v} IS NOT NULL")
+    return src.groupBy(group_col).agg(*aggs) if group_col else src.agg(*aggs)
 
 
 def gauge_last(df: DataFrame, key: str, value_col: str, ts_col: str = "ts") -> DataFrame:
@@ -73,7 +71,6 @@ def gauge_last(df: DataFrame, key: str, value_col: str, ts_col: str = "ts") -> D
         .groupBy(key)
         .agg(F.max_by(value_col, F.col(ts_col)).alias("last_value"),
              F.max(ts_col).alias("last_ts"))
-        .orderBy(key)
     )
 
 

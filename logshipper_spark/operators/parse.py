@@ -4,17 +4,16 @@ The reference's match/extract (``logshipper/filters.py::prepare_match``
 [approx]) applies one compiled regex per message and copies named groups into
 fields.  Here parsing is columnar with two strategies:
 
-* **native** (default): per-family ``rlike`` dispatch + ``regexp_extract``
-  per group — all JVM-side, whole-stage-codegen'd, zero Python.  Best when
-  the pattern pack is small (our five line families).
+* **native** (default): two projections of SQL text, JVM-side and
+  whole-stage-codegen'd, zero Python.  ``pattern_name`` is one CASE of
+  ``<field> RLIKE '<java regex>'`` in pack order (first match wins); each
+  named group is one CASE on ``pattern_name`` over ``regexp_extract`` by
+  group index.  The driver builds one ``F.expr`` per output column.
 * **pandas**: ONE Arrow-batched UDF compiling every pattern once per worker
-  and returning a struct of all groups in a single pass over ``text``.  Best
-  for large grok packs where N_patterns × regexp_extract calls would rescan
-  the string many times.
+  and returning a struct of all groups in a single pass over ``text`` —
+  the independent reference the native strategy is tested against.
 
-Both return the same struct column so callers can flip strategies and
-compare plans/benchmarks (bench.py does).
-"""
+Both return the same columns, so callers can flip strategies (bench.py does)."""
 
 from __future__ import annotations
 
@@ -22,6 +21,8 @@ import re
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
+
+from logshipper_spark.operators.sqltext import sql_ident, sql_str
 
 
 @dataclass
@@ -110,47 +111,36 @@ def grok_native(df: DataFrame, field: str = "text",
                 patterns: list[GrokPattern] | None = None) -> DataFrame:
     """First-match-wins dispatch across the pack, all in codegen'd exprs.
 
-    Adds one column per named group (null where the winning pattern lacks
-    the group or nothing matched) plus ``pattern_name``.
+    Adds ``pattern_name`` plus one column per named group (null where the
+    winning pattern lacks the group or nothing matched).
     """
     patterns = patterns or TRANSCRIPT_PATTERNS
-    col = F.col(field)
-    # first-match-wins pattern id, evaluated once
-    pname: Column = F.lit(None).cast("string")
-    for p in reversed(patterns):
-        pname = F.when(col.rlike(p.java_pattern), F.lit(p.name)).otherwise(pname)
-    df = df.withColumn("pattern_name", pname)
+    src = sql_ident(field)
+    rx = [sql_str(p.java_pattern) for p in patterns]
+    name = " ".join(f"WHEN {src} RLIKE {r} THEN {sql_str(p.name)}"
+                    for p, r in zip(patterns, rx))
+    df = df.withColumns({"pattern_name": F.expr(f"CASE {name} END")})
     new = {}
     for gname, gtype in _all_fields(patterns):
-        expr: Column = F.lit(None).cast(gtype)
-        for p in reversed(patterns):
+        branches = []
+        for p, r in zip(patterns, rx):
             if gname in p.groups:
-                # non-string casts go through nullif + try_cast: a row
-                # matching the pattern WITHOUT an optional group makes
-                # regexp_extract return '' — under Spark 4 ANSI mode a
-                # plain CAST('' AS INT) throws and fails the whole job
-                # (CLAUDE.md rule; r4 review finding).  String groups keep
-                # the raw '' (an empty capture is a value, and the pandas
-                # differential path returns '' there too).
-                raw = F.regexp_extract(col, p.java_pattern, p.groups[gname])
-                value = (
-                    raw if gtype == "string"
-                    else F.nullif(raw, F.lit("")).try_cast(gtype)
-                )
-                expr = F.when(F.col("pattern_name") == p.name, value).otherwise(expr)
-        new[gname] = expr
+                # an unmatched optional group extracts '': under ANSI mode
+                # CAST('' AS INT) fails the job, hence NULLIF + TRY_CAST
+                # (r4 review).  String groups keep the raw '' (a value;
+                # grok_pandas returns '' there too).
+                raw = f"regexp_extract({src}, {r}, {p.groups[gname]})"
+                value = raw if gtype == "string" else f"TRY_CAST(NULLIF({raw}, '') AS {gtype})"
+                branches.append(f"WHEN pattern_name = {sql_str(p.name)} THEN {value}")
+        new[gname] = F.expr(f"CASE {' '.join(branches)} END")
     return df.withColumns(new)
 
 
 def grok_pandas(df: DataFrame, field: str = "text",
                 patterns: list[GrokPattern] | None = None) -> DataFrame:
     """Single-pass Arrow UDF: compile all regexes once per executor, return
-    a struct of every group for the whole batch.
-
-    Cheaper than N×regexp_extract for big packs: each string is scanned at
-    most ``n_patterns`` times (vs ``sum(len(groups))`` for the native path)
-    and short-circuits at the first matching pattern.
-    """
+    a struct of every group for the whole batch.  Python ``re`` end to end,
+    so it checks ``grok_native`` independently (tests/test_parse.py)."""
     import pandas as pd
 
     patterns = patterns or TRANSCRIPT_PATTERNS
@@ -198,12 +188,9 @@ def grok_pandas(df: DataFrame, field: str = "text",
                 out[g] = out[g].astype("Int32")
         return out
 
-    struct = _parse(F.col(field))
-    df = df.withColumn("__parsed", struct)
     cols = ["pattern_name"] + [g for g, _ in fields]
-    for c in cols:
-        df = df.withColumn(c, F.col(f"__parsed.{c}"))
-    return df.drop("__parsed")
+    parsed = df.withColumn("__parsed", _parse(F.col(field)))
+    return parsed.withColumns({c: F.col(f"__parsed.{c}") for c in cols}).drop("__parsed")
 
 
 def split_unparsed(

@@ -27,18 +27,19 @@ import threading
 
 from pyspark.sql import DataFrame, functions as F
 
+from logshipper_spark.operators.sqltext import sql_ident
 from logshipper_spark.plans.spec import ACTIVE, SINKS
 
 
 def with_bucket(df: DataFrame, key: str = "conv_id", n_buckets: int = 64,
                 salt_buckets: int = 0) -> DataFrame:
-    """Routing bucket + optional skew salt (write-path only)."""
-    out = df.withColumn("bucket", F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast("int"))
+    """Routing bucket + optional skew salt (write-path only), one
+    projection of SQL text."""
+    k = sql_ident(key)
+    cols = {"bucket": F.expr(f"CAST(pmod(xxhash64({k}), {int(n_buckets)}) AS INT)")}
     if salt_buckets > 1:
-        out = out.withColumn(
-            "salt", F.pmod(F.xxhash64(key, "turn_idx"), F.lit(salt_buckets)).cast("int")
-        )
-    return out
+        cols["salt"] = F.expr(f"CAST(pmod(xxhash64({k}, turn_idx), {int(salt_buckets)}) AS INT)")
+    return df.withColumns(cols)
 
 
 def write_fanout_explode(

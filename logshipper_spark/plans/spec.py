@@ -175,6 +175,12 @@ def _compile_template(tmpl: str, cols: Mapping[str, Column], m: _MatchInfo) -> C
     return parts[0] if len(parts) == 1 else F.concat(*parts)
 
 
+def _fan_out(df: DataFrame) -> DataFrame:
+    """One row per (message, sink).  ``explode`` emits no row for an empty
+    ``__sinks``, and Catalyst infers the ``size > 0`` filter from it."""
+    return df.withColumn("sink", F.explode(SINKS)).drop(ACTIVE, SINKS)
+
+
 class Pipeline:
     """A compiled pipeline: ``DataFrame -> DataFrame`` adding extracted
     columns plus ``__active`` / ``__sinks`` bookkeeping columns."""
@@ -196,10 +202,10 @@ class Pipeline:
         return self.apply(df)
 
     def apply(self, df: DataFrame, record_gates: bool = False) -> DataFrame:
-        if ACTIVE not in df.columns:
-            df = df.withColumn(ACTIVE, F.lit(True))
-        if SINKS not in df.columns:
-            df = df.withColumn(SINKS, F.array().cast("array<string>"))
+        missing = [c for c in (ACTIVE, SINKS) if c not in df.columns]
+        if missing:
+            init = {ACTIVE: F.lit(True), SINKS: F.array().cast("array<string>")}
+            df = df.withColumns({c: init[c] for c in missing})
         for i, step in enumerate(self.steps):
             df = self._apply_step(df, step, gate_col=f"__gate_{i}" if record_gates else None)
         return df
@@ -237,24 +243,15 @@ class Pipeline:
             F.approx_count_distinct(c).alias(f"set_{c}")
             for c in (set_cols or [])
         ]
-        out = out.observe(obs, *metrics).drop(*gate_cols)
-        routed = (
-            out.where(F.size(SINKS) > 0).withColumn("sink", F.explode(SINKS)).drop(ACTIVE, SINKS)
-        )
-        return routed, obs
+        return _fan_out(out.observe(obs, *metrics).drop(*gate_cols)), obs
 
     def routed(self, df: DataFrame) -> DataFrame:
         """Explode to one row per (message, sink) — the single-pass fan-out
         shape.  Rows dropped (or never forwarded) disappear here."""
-        out = self.apply(df)
         # NOTE: no filter on ACTIVE here — a forward that fired before a
         # later (or same-step) drop already delivered; drop only prevents
         # future forwards, which step gating handles.
-        return (
-            out.where(F.size(SINKS) > 0)
-            .withColumn("sink", F.explode(SINKS))
-            .drop(ACTIVE, SINKS)
-        )
+        return _fan_out(self.apply(df))
 
     def surviving(self, df: DataFrame) -> DataFrame:
         """Rows that were not dropped, with bookkeeping columns removed."""

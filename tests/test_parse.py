@@ -87,15 +87,60 @@ def big_pack_df(spark, n_rows: int = 2000, n_families: int = 24):
 
 def test_large_pack_native_and_pandas_agree(spark):
     """≥20-pattern pack differential: both strategies agree row-for-row —
-    the evidence behind 'flip strategies by pack size' at 100×."""
-    pack = big_pack(24)
-    df = big_pack_df(spark)
+    the evidence behind 'flip strategies by pack size' at 100×.  One more
+    pattern holds ', " and \\ (quoted into the native SQL text) and is read
+    from a field whose name needs backquotes; NULL text parses to NULLs."""
+    from logshipper_spark.operators.parse import GrokPattern
+
+    quoted = GrokPattern(
+        "quoted", r"""^Q '(?P<qkey>[^']*)' "(?P<qval>\d+)" \\(?P<qtail>\w+)$""", {"qval": "int"}
+    )
+    pack = big_pack(24) + [quoted]
+    base = big_pack_df(spark)
+    extra = spark.createDataFrame(
+        [(-1, """Q 'a"b\\c' "7" \\end"""), (-2, """Q 'a' "7" end"""), (-3, None)],
+        "id long, text string",
+    )
+    df = base.unionByName(extra).withColumnRenamed("text", "raw text")
     cols = ["id", "pattern_name"] + [g for p in pack for g in p.groups]
-    a = grok_native(df, patterns=pack).select(*cols)
-    b = grok_pandas(df, patterns=pack).select(*cols)
+    a = grok_native(df, field="raw text", patterns=pack).select(*cols)
+    b = grok_pandas(df, field="raw text", patterns=pack).select(*cols)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
     matched = a.where(F.col("pattern_name").isNotNull()).count()
-    assert matched == df.count() - df.count() // 7  # every 7th row is free text
+    n = base.count()
+    assert matched == n - n // 7 + 1  # every 7th row is free text
+    q = {r["id"]: r for r in a.where(F.col("id") < 0).collect()}
+    assert (q[-1]["pattern_name"], q[-1]["qkey"], q[-1]["qval"], q[-1]["qtail"]) == (
+        "quoted", 'a"b\\c', 7, "end")
+    assert q[-2]["pattern_name"] is None and q[-3]["pattern_name"] is None
+
+
+def test_grok_native_builds_one_expr_per_output_column(spark, monkeypatch):
+    """Driver cost: each output column is ONE SQL-text ``F.expr``, never a
+    Column operator per pattern and group (a PySpark 4 Column call is a
+    call-site capture plus py4j round trips)."""
+    from collections import Counter
+
+    from logshipper_spark.operators.parse import _all_fields, big_pattern_pack
+
+    df = spark.createDataFrame([("x",)], "text string")
+    calls = Counter()
+
+    def counting(name):
+        real = getattr(F, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return real(*args, **kwargs)
+        return wrapper
+
+    for name in ("when", "regexp_extract", "expr"):
+        monkeypatch.setattr(F, name, counting(name))
+    for pack in (TRANSCRIPT_PATTERNS, big_pattern_pack()):
+        calls.clear()
+        grok_native(df, patterns=pack)
+        assert (calls["when"], calls["regexp_extract"], calls["expr"]) == (
+            0, 0, 1 + len(_all_fields(pack)))
 
 
 def test_big_pattern_pack_strategies_agree_on_transcripts(spark, transcripts):

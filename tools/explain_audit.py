@@ -36,6 +36,10 @@ CHECKS = {
     # AQE wraps un-executed plans (isFinalPlan=false) without codegen
     # markers; assert the partial+final agg shape instead
     "counter_by_type": [("partial aggregation", r"HashAggregate.*partial_", True)],
+    # statsd sinks flush unordered rows: a global sort adds a range-sampling
+    # job and a second shuffle (SortAggregate does not match \bSort\b)
+    "timer_percentiles": [("no global sort", r"\bSort\b", False)],
+    "tool_invocations": [("no global sort", r"\bSort\b", False)],
     "match_extract": [
         ("scan reads only needed cols", r"ReadSchema: struct<event_id:bigint,props:string>", True),
         ("codegen project", r"\*\(\d+\) Project", True),
@@ -287,6 +291,23 @@ def extra_checks(spark, sf_dir: str) -> int:
     check("asof_ts_bucket", "window partitioned by (key, bucket)",
           ap, r"windowspecdefinition\(user_id[^\)]*__bk", True)
     check("asof_ts_bucket", "no nested-loop join", ap, r"NestedLoop", False)
+
+    # 6. the four ship aggregate sinks (bench.run_e2e) end unordered, over
+    # a pinned transcripts frame (its generator's window sorts)
+    from logshipper_spark.operators import aggregate as agg
+    from logshipper_spark.operators.parse import grok_native
+    from logshipper_spark.sources.transcripts import generate_transcripts
+
+    t = generate_transcripts(spark, n_convs=20).localCheckpoint()
+    sinks = {
+        "turns_per_role": agg.turns_per_role(t),
+        "tool_invocations": agg.tool_invocations(t),
+        "events_per_minute": agg.events_per_minute(t),
+        "timer_percentiles": agg.timer_percentiles(grok_native(t), "duration_ms", "level",
+                                                   approx=True),
+    }
+    for name, sink in sinks.items():
+        check(f"ship_sink_{name}", "no global sort", _plan(sink), r"\bSort\b", False)
 
     return bad
 
