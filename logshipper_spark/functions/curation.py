@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from logshipper_spark.functions.textstats import (
     english_score,
     fingerprint,
+    ngram_array_pandas,
     stratified_sample,
 )
 from logshipper_spark.sources.local import local_table
@@ -179,10 +180,6 @@ class IncrementalCurator:
         return english_score(F.col(self.text_col))
 
     def _grams(self, d: DataFrame) -> DataFrame:
-        # Arrow kernel — the expression form pays a ~20x interpreted-HOF
-        # recompute penalty (textstats.ngram_array_pandas docstring)
-        from logshipper_spark.functions.textstats import ngram_array_pandas
-
         g = ngram_array_pandas(self.ngram)(F.col(self.text_col))
         return d.select(F.col(self.id_col), F.explode(g).alias("gram"))
 

@@ -13,16 +13,22 @@ Four tiers, increasing fuzziness, each designed around its shuffle shape:
   near-dups share the fingerprint (or a rotated band of it).
 * **n-gram Jaccard**   — exact verification metric over candidate pairs.
 
-MinHash signatures and Jaccard grams come from Arrow-batched numpy/Python
-kernels (interpreted higher-order-function lambdas cost ~20x more); exact
-and SimHash hashing stay JVM-side (xxhash64/md5, codegen).
+MinHash signatures and Jaccard grams come from Arrow kernels over ONE
+tokenizer and shingler (``textstats._words`` / ``textstats._grams``), so
+the signatures hash exactly the grams the verify stage compares
+(interpreted higher-order-function lambdas cost ~20x more); exact and
+SimHash hashing stay JVM-side (xxhash64/md5, codegen).
 """
 
 from __future__ import annotations
 
+import zlib
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 
-from logshipper_spark.functions.textstats import fingerprint
+from logshipper_spark.functions.textstats import _grams, _words, fingerprint, ngram_array_pandas
 
 
 # ---------------------------------------------------------------- exact --
@@ -57,45 +63,44 @@ def minhash_signatures_pandas(
     k: int = 3,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, sig) via ONE Arrow-batched numpy pass — the signature path of
+    """(id, sig) via ONE ``mapInArrow`` pass — the signature path of
     ``minhash_candidates`` (~20x over interpreted higher-order functions,
     measured).
 
-    Per batch: regex-tokenize, k-gram shingle, crc32 base hash, then the
-    whole K-signature as one universal-hash broadcast
-    ``min((A·h + B) mod p)`` in numpy.  crc32 + seeded RandomState keep it
-    deterministic across workers and runs (no reliance on PYTHONHASHSEED).
+    Signs the verify stage's own grams: each text's distinct ``k``-grams
+    come from the shingler ``jaccard`` uses (``textstats._grams`` over
+    ``textstats._words``).  Per batch: crc32 base hash per gram, then per
+    hash function one universal-hash ``min((A·h + B) mod p)`` over every
+    gram of the batch, reduced per document.  crc32 + seeded RandomState
+    keep it deterministic across workers and runs (no reliance on
+    PYTHONHASHSEED).  A NULL text gets no row; the id column passes
+    through, so ``id`` has the input schema's type.
     """
-    import numpy as np
-    import pandas as pd
-    import re as _re
-    import zlib
-
-    out_schema = f"id long, sig array<long>"
-    MASK = np.int64((1 << 61) - 1)
+    mask = np.int64((1 << 61) - 1)
+    rng = np.random.RandomState(seed)
+    a = rng.randint(1, 1 << 61, size=num_hashes).astype(np.int64)
+    b = rng.randint(0, 1 << 61, size=num_hashes).astype(np.int64)
+    tid = df.schema[id_col].dataType.simpleString()
 
     def run(batches):
-        rx = _re.compile(r"[^a-z0-9\s]+")
-        rng = np.random.RandomState(seed)
-        A = rng.randint(1, 1 << 61, size=num_hashes).astype(np.int64)
-        B = rng.randint(0, 1 << 61, size=num_hashes).astype(np.int64)
-        for pdf in batches:
-            ids, sigs = [], []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                toks = rx.sub(" ", (t or "").lower()).split()
-                if len(toks) >= k:
-                    grams = {" ".join(toks[j : j + k]) for j in range(len(toks) - k + 1)}
-                else:
-                    grams = {" ".join(toks)}
-                h = np.fromiter(
-                    (zlib.crc32(g.encode()) for g in grams), dtype=np.int64, count=len(grams)
-                )
-                sig = ((A[:, None] * h[None, :] + B[:, None]) & MASK).min(axis=1)
-                ids.append(i)
-                sigs.append(sig.tolist())
-            yield pd.DataFrame({"id": ids, "sig": sigs})
+        for batch in batches:
+            texts = batch.column(1)
+            keep = texts.is_valid()
+            grams = [_grams(_words(t), k) for t in texts.filter(keep).to_pylist()]
+            h = np.fromiter((zlib.crc32(g.encode()) for gs in grams for g in gs), np.int64)
+            # every text has at least one gram, so no segment is empty
+            lens = np.fromiter(map(len, grams), dtype=np.int64, count=len(grams))
+            starts = np.cumsum(lens) - lens
+            sig = np.empty((num_hashes, len(grams)), dtype=np.int64)
+            for j in range(num_hashes if len(grams) else 0):
+                sig[j] = np.minimum.reduceat((a[j] * h + b[j]) & mask, starts)
+            offsets = pa.array(np.arange(0, sig.size + 1, num_hashes, dtype=np.int32))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).filter(keep), pa.ListArray.from_arrays(offsets, sig.T.ravel())],
+                names=["id", "sig"],
+            )
 
-    return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(run, out_schema)
+    return df.select(id_col, text_col).mapInArrow(run, f"id {tid}, sig array<long>")
 
 
 def minhash_candidates(
@@ -146,7 +151,7 @@ def minhash_candidates(
     # the hub-star branch — and because the small stats side broadcasts,
     # no exchange-reuse ever fires, so Catalyst re-executed the WHOLE
     # signature pipeline (the corpus-wide Arrow pass) once per consumer:
-    # SIX MapInPandas nodes in the r6-before plan, measured 5.3 s vs
+    # SIX signature-pass nodes in the r6-before plan, measured 5.3 s vs
     # 0.86 s for one signature pass at sf0.1.  localCheckpoint pins
     # (id, band_id, band_hash) — 8 short rows per doc, never the text —
     # and cuts the plan to ONE signature pass.  Recomputed from parquet
@@ -207,13 +212,10 @@ def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
     # r6 verify-stage rework (guide §4.1/§2.3), two changes vs the
     # join-text-then-shingle-per-pair form, output-identical:
     #
-    # 1. Grams come from the Arrow kernel, not an interpreted-HOF
-    #    transform: that lambda re-evaluates the tokenize subexpression
-    #    PER ELEMENT (tokens × grams evals per text; measured 1.6 s of a
-    #    1.85 s verify for 256 pairs at sf0.1).  The kernel is tested
-    #    row-for-row against the expression form, its ASCII-pinned regex
-    #    mirrors Java semantics, and jaccard only consumes set sizes, so
-    #    gram order can't matter either.
+    # 1. Grams come from the Arrow kernel (the grams the signatures
+    #    hash), not an interpreted-HOF transform that re-evaluates the
+    #    tokenize subexpression PER ELEMENT (measured 1.6 s of a 1.85 s
+    #    verify for 256 pairs at sf0.1).
     # 2. Grams are computed ONCE PER UNIQUE CANDIDATE DOC (semi-join the
     #    pair ids into docs first, shingle, pin), then the pair joins
     #    attach the precomputed arrays.  The old shape shingled per
@@ -221,7 +223,6 @@ def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
     #    dup-heavy corpus (the exact case LSH surfaces) that is the
     #    whole wall: measured 12 s → ~1 s verify for 225k pairs over
     #    50k docs (10× stress table).
-    from logshipper_spark.functions.textstats import ngram_array_pandas
 
     # the pair list is consumed three times below (two id projections +
     # the pair join); pin it so an expensive upstream candidate plan

@@ -1,22 +1,67 @@
 """Text analysis for training-data pipelines: token counting, quality
 scoring, language-ID heuristic, document fingerprinting.
 
-All pure built-in column expressions (regexp_extract_all / size / md5 —
-whole-stage codegen, no Python), so they hold up at 100 TB: narrow
-per-row transforms, no shuffle, filters push to the scan.
+Counts, scores and fingerprints are built-in column expressions (codegen,
+no Python): narrow per-row transforms, no shuffle, filters push to the
+scan.  The per-token kernels (n-grams, chunks, repetition signals, char
+entropy) are Arrow UDFs built by ``_text_udf``; the word-level ones
+tokenize with ``_words`` and shingle with ``_grams``.
 """
 
 from __future__ import annotations
 
 import math
+import re
+from collections import Counter
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import DataType
 
 # BPE-ish tokenization: words | numbers | single non-space symbol
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 _EN_STOPWORDS_RE = r"(?i)\b(the|and|of|to|in|is|a|that|it|for)\b"
 _PUNCT_RE = r"[^A-Za-z0-9\s]"
+# re.ASCII: Java regex's ASCII \s, so the Python kernels and the JVM/oracle
+# expression forms split the same text into the same words
+_STRIP = re.compile(_PUNCT_RE + "+", re.ASCII)
+
+
+def _words(t: str) -> list[str]:
+    """The word tokenizer of every Python text kernel: strip ASCII
+    non-alphanumerics, THEN lowercase (the JVM/oracle order; lower-first
+    keeps e.g. U+212A KELVIN SIGN as 'k'), then split on ASCII whitespace
+    (only ASCII is left, so ``str.split()`` is the ``\\s+`` split)."""
+    return _STRIP.sub(" ", t).lower().split()
+
+
+def _grams(words: list[str], n: int) -> Counter:
+    """The word n-gram shingler: a Counter whose keys are the distinct
+    n-grams of ``words`` in first-occurrence order and whose values are
+    their counts.  Fewer than ``n`` words give ONE gram of all of them
+    (``""`` for none), as the expression form's ``greatest(size - n + 1,
+    1)`` slice does."""
+    g = Counter(map(" ".join, zip(*(words[i:] for i in range(n)))))
+    return g or Counter((" ".join(words),))
+
+
+def _text_udf(fn, ddl: str):
+    """An Arrow UDF over one string column that applies ``fn`` to every
+    non-NULL text; a NULL text gives NULL.  The result is built at the
+    declared type, so an all-NULL batch still has it.  A struct result is
+    assembled field by field: a NULL text gives a struct of NULL fields,
+    never a NULL struct."""
+    at = to_arrow_type(DataType.fromDDL(ddl))
+
+    def run(s: pa.Array) -> pa.Array:
+        out = pa.array([None if t is None else fn(t) for t in s.to_pylist()], at)
+        if pa.types.is_struct(at):
+            out = pa.StructArray.from_arrays(out.flatten(), fields=list(at))
+        return out
+
+    return F.arrow_udf(run, ddl)
 
 
 # regexp_count, NOT size(regexp_extract_all(...)): the count is identical
@@ -188,7 +233,7 @@ def repetition_features(n: int = 2):
     "Scaling Language Models" §A1.1 repetition filters — public paper):
     heavily repetitive documents (boilerplate, scraped menus, generation
     loops) are low-value training data even when their token stats look
-    fine.  Returns a pandas_udf producing a struct of
+    fine.  Returns an Arrow kernel producing a struct of
 
     * ``dup_line_frac``  — duplicated (trimmed, non-empty) lines / lines
     * ``dup_ngram_frac`` — duplicated word n-grams / n-grams (with
@@ -196,52 +241,33 @@ def repetition_features(n: int = 2):
     * ``top_ngram_frac`` — occurrences of the single most frequent n-gram
       / total n-grams
 
-    One narrow Arrow pass per batch (same rationale as
-    ``ngram_array_pandas``); all three in [0, 1], rounded to 6 for
-    cross-engine oracle parity.  Type hints are omitted on the inner
-    function — Series→DataFrame (struct return) pandas_udfs require it.
+    One narrow Arrow pass per batch (``_text_udf``); all three in [0, 1],
+    rounded to 6 for cross-engine oracle parity; a NULL text gives NULL
+    signals.
     """
-    import re as _re
-    from collections import Counter
 
-    rx = _re.compile(r"[^A-Za-z0-9\s]+", _re.ASCII)
-    ws = _re.compile(r"\s+", _re.ASCII)
+    def rep(t: str) -> dict:
+        # explicit ASCII whitespace set: Python str.strip() is
+        # unicode-aware, DuckDB trim() is not — pin both to ASCII
+        lines = [x.strip(" \t\r\f\v") for x in t.split("\n")]
+        lines = [x for x in lines if x]
+        nl = len(lines)
+        words = _words(t)
+        if len(words) < n:
+            # no real n-gram exists: report 0.0, not the degenerate
+            # top_ngram_frac=1.0 that would make repetition_filter
+            # drop every empty/short doc as "maximally repetitive"
+            gf = tf = 0.0
+        else:
+            cnt = _grams(words, n)
+            ng = len(words) - n + 1
+            gf, tf = round((ng - len(cnt)) / ng, 6), round(max(cnt.values()) / ng, 6)
+        return {"dup_line_frac": round((nl - len(set(lines))) / nl, 6) if nl else 0.0,
+                "dup_ngram_frac": gf, "top_ngram_frac": tf}
 
-    @F.pandas_udf("struct<dup_line_frac: double, dup_ngram_frac: double, top_ngram_frac: double>")
-    def _rep(s):
-        lf, gf, tf = [], [], []
-        for t in s:
-            if t is None:
-                # NULL text → NULL signals (the oracle's CASE over a NULL
-                # list yields NULL), never a crash (review r6)
-                lf.append(None)
-                gf.append(None)
-                tf.append(None)
-                continue
-            # explicit ASCII whitespace set: Python str.strip() is
-            # unicode-aware, DuckDB trim() is not — pin both to ASCII
-            lines = [x.strip(" \t\r\f\v") for x in t.split("\n")]
-            lines = [x for x in lines if x]
-            nl = len(lines)
-            lf.append(round((nl - len(set(lines))) / nl, 6) if nl else 0.0)
-            # strip THEN lower — the oracle's operation order (see
-            # ngram_array_pandas; identical for ASCII text)
-            toks = [w for w in ws.split(rx.sub(" ", t).lower()) if w]
-            if len(toks) < n:
-                # no real n-gram exists: report 0.0, not the degenerate
-                # top_ngram_frac=1.0 that would make repetition_filter
-                # drop every empty/short doc as "maximally repetitive"
-                gf.append(0.0)
-                tf.append(0.0)
-                continue
-            grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
-            cnt = Counter(grams)
-            ng = len(grams)
-            gf.append(round((ng - len(cnt)) / ng, 6))
-            tf.append(round(max(cnt.values()) / ng, 6))
-        return pd.DataFrame({"dup_line_frac": lf, "dup_ngram_frac": gf, "top_ngram_frac": tf})
-
-    return _rep
+    return _text_udf(
+        rep, "struct<dup_line_frac: double, dup_ngram_frac: double, top_ngram_frac: double>"
+    )
 
 
 def repetition_filter(df: DataFrame, text_col: str = "text", n: int = 2,
@@ -252,12 +278,7 @@ def repetition_filter(df: DataFrame, text_col: str = "text", n: int = 2,
     three signal columns and filters; thresholds are the knobs a curation
     run tunes per corpus."""
     rep = repetition_features(n)(F.col(text_col))
-    out = df.withColumn("__rep", rep).select(
-        "*",
-        F.col("__rep.dup_line_frac").alias("dup_line_frac"),
-        F.col("__rep.dup_ngram_frac").alias("dup_ngram_frac"),
-        F.col("__rep.top_ngram_frac").alias("top_ngram_frac"),
-    ).drop("__rep")
+    out = df.withColumn("__rep", rep).select("*", "__rep.*").drop("__rep")
     return out.where(
         (F.col("dup_line_frac") <= max_dup_line_frac)
         & (F.col("dup_ngram_frac") <= max_dup_ngram_frac)
@@ -363,39 +384,13 @@ def pack_payloads(df: DataFrame, budget: int = 2048, shards: int = 16,
 
 
 def ngram_array_pandas(n: int):
-    """Arrow-vectorized n-gram kernel: tokenize + slide + dedup per Arrow
-    batch in one narrow pass — no shuffle, no interpreted-lambda recompute.
-    The ``F.transform`` expression form re-evaluates the tokenize
-    subexpression PER ELEMENT (~tokens × grams interpreted evals per row,
-    measured ~20x slower); the tests keep it as the row-for-row reference.
-    ``re.ASCII`` matches Java regex's ASCII ``\\s`` / ``[^A-Za-z0-9\\s]``
-    semantics."""
-    import re as _re
-
-    # module-level pd import below: the deferred-annotation hints on the
-    # udf resolve 'pd.Series' against THIS module's globals
-    rx = _re.compile(r"[^A-Za-z0-9\s]+", _re.ASCII)
-    ws = _re.compile(r"\s+", _re.ASCII)
-
-    @F.pandas_udf("array<string>")
-    def _grams(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if t is None:
-                # NULL in, NULL out: a NULL text yields a NULL array,
-                # never [''] and never a crash (review r6: t.lower()
-                # raised on None)
-                out.append(None)
-                continue
-            # strip THEN lower, matching the JVM/oracle operation order
-            # (lower-first keeps non-ASCII letters whose lowercase is
-            # ASCII, e.g. U+212A KELVIN SIGN → 'k'; identical for ASCII)
-            toks = [w for w in ws.split(rx.sub(" ", t).lower()) if w]
-            k = max(len(toks) - n + 1, 1)
-            out.append(list(dict.fromkeys(" ".join(toks[i:i + n]) for i in range(k))))
-        return pd.Series(out)
-
-    return _grams
+    """Arrow kernel: the distinct word n-grams of each text in
+    first-occurrence order (``_words`` then ``_grams``) in one narrow pass
+    — no shuffle, no interpreted-lambda recompute.  The ``F.transform``
+    expression form re-evaluates the tokenize subexpression PER ELEMENT
+    (~tokens × grams interpreted evals per row, measured ~20x slower); the
+    tests keep it as the row-for-row reference."""
+    return _text_udf(lambda t: list(_grams(_words(t), n)), "array<string>")
 
 
 def doc_novelty(
@@ -509,18 +504,11 @@ def chunk_array_pandas(n: int):
     'paragraphs' deterministically on corpora that carry none; the same
     no-interpreted-HOF rationale as ``ngram_array_pandas``."""
 
-    @F.pandas_udf("array<string>")
-    def _chunks(s: pd.Series) -> pd.Series:
-        out = []
-        for t in s:
-            if t is None:
-                out.append(None)  # split(NULL) → NULL array, not a crash
-                continue
-            toks = t.split(" ")
-            out.append([" ".join(toks[i:i + n]) for i in range(0, len(toks), n)])
-        return pd.Series(out)
+    def chunks(t: str) -> list[str]:
+        toks = t.split(" ")
+        return [" ".join(toks[i:i + n]) for i in range(0, len(toks), n)]
 
-    return _chunks
+    return _text_udf(chunks, "array<string>")
 
 
 def paragraph_dedup(
@@ -610,20 +598,15 @@ def char_entropy_pandas():
     oracle can recompute the identical value.  Callers round with F.round
     (half-up, matches DuckDB on positives — python round() is banker's
     and does NOT)."""
-    import numpy as np
 
-    @F.pandas_udf("double")
-    def _entropy(texts: pd.Series) -> pd.Series:
-        def ent(t):
-            if not t:
-                return 0.0
-            _, counts = np.unique(np.array(list(t)), return_counts=True)
-            p = counts / counts.sum()
-            return float(-(p * np.log2(p)).sum() + 0.0)
+    def ent(t: str) -> float:
+        if not t:
+            return 0.0
+        _, counts = np.unique(np.array(list(t)), return_counts=True)
+        p = counts / counts.sum()
+        return float(-(p * np.log2(p)).sum() + 0.0)
 
-        return texts.map(ent, na_action="ignore")
-
-    return _entropy
+    return _text_udf(ent, "double")
 
 
 def mixture_weights(

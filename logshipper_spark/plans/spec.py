@@ -56,6 +56,15 @@ from pyspark.sql.window import Window
 ACTIVE = "__active"
 SINKS = "__sinks"
 
+# the 4-step demo pipeline: errors and syslog lines to their own sinks,
+# DEBUG dropped, every surviving line archived
+DEMO_SPEC: list[dict[str, Any]] = [
+    {"match": {"text": "^ERROR "}, "forward": ["errors"]},
+    {"match": {"text": "^<"}, "forward": ["syslog"]},
+    {"match": {"text": "^DEBUG "}, "drop": True},
+    {"forward": ["archive"]},
+]
+
 # unique temp-column suffixes for nested call gating (a sub-pipeline may
 # itself contain call steps; fixed names would collide with the caller's)
 _CALL_IDS = itertools.count()

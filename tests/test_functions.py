@@ -378,6 +378,105 @@ class TestVectorKernelContract:
         assert {r[0]: (r[1], r[2]) for r in assign.collect()} == want
 
 
+# (doc_id, text): the NULL / empty / short / control-whitespace / non-ASCII
+# rows every text kernel must handle
+_TEXTS = [
+    (1, None),
+    (2, ""),
+    (3, " \t\n "),
+    (4, "two words"),
+    (5, "a\tb\r\nline two\fthree\nline two\n"),
+    (6, "\u00dcn\u00ef K"),
+    (7, "The cat. The cat! the CAT sat on the mat, the cat sat"),
+]
+
+# each kernel's expected rows on _TEXTS
+_TEXT_KERNEL_ROWS = {
+    "chunk_3": [None, [""], [" \t\n "], ["two words"],
+                ["a\tb\r\nline two\fthree\nline two\n"], ["\u00dcn\u00ef K"],
+                ["The cat. The", "cat! the CAT", "sat on the", "mat, the cat", "sat"]],
+    "repetition_2": [(None, None, None), (0.0, 0.0, 0.0), (0.0, 0.0, 0.0), (0.0, 0.0, 1.0),
+                     (0.0, 0.166667, 0.333333), (0.0, 0.0, 1.0), (0.0, 0.416667, 0.333333)],
+    "entropy": [None, 0.0, 1.5, 2.725480556997868, 3.8404025467025056, 2.321928094887362,
+                3.4300392096733465],
+}
+
+
+def _minhash_ref(grams: list[str], num_hashes: int = 32, seed: int = 7) -> list[int]:
+    """One document's minhash signature over ``grams``: crc32 per gram,
+    then ``min((A·h + B) & (2^61 - 1))`` per hash function, A and B drawn
+    from ``RandomState(seed)``."""
+    import zlib
+
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    a = rng.randint(1, 1 << 61, size=num_hashes).astype(np.int64)
+    b = rng.randint(0, 1 << 61, size=num_hashes).astype(np.int64)
+    h = np.array([zlib.crc32(g.encode()) for g in grams], dtype=np.int64)
+    return ((a[:, None] * h[None, :] + b[:, None]) & ((1 << 61) - 1)).min(axis=1).tolist()
+
+
+class TestTextKernelContract:
+    @pytest.mark.parametrize(
+        "kernel", ["ngram_1", "ngram_3", "ngram_5", "chunk_3", "repetition_2", "entropy"]
+    )
+    def test_kernel_matrix(self, spark, kernel):
+        """One input contract for the Arrow text kernels: a NULL text gives
+        a NULL result (a struct of NULLs for the repetition signals), and
+        empty, whitespace-only, short, control-whitespace and non-ASCII
+        texts give the rows the row-for-row references give."""
+        df = local_table(spark, _TEXTS, "doc_id long, text string")
+        name, _, n = kernel.partition("_")
+        col = F.col("text")
+        out = {
+            "ngram": lambda: textstats.ngram_array_pandas(int(n))(col),
+            "chunk": lambda: textstats.chunk_array_pandas(int(n))(col),
+            "repetition": lambda: textstats.repetition_features(int(n))(col),
+            "entropy": lambda: textstats.char_entropy_pandas()(col),
+        }[name]()
+        rows = df.select("doc_id", out.alias("got")).orderBy("doc_id").collect()
+        got = [tuple(r["got"]) if name == "repetition" else r["got"] for r in rows]
+        if name == "ngram":
+            ref = df.select("doc_id", ngram_array_expr(col, int(n)).alias("ref"))
+            assert got == [r["ref"] for r in ref.orderBy("doc_id").collect()]
+        else:
+            assert got == _TEXT_KERNEL_ROWS[kernel]
+
+    def test_signatures_hash_the_verify_grams(self, spark, docs):
+        """Each minhash signature is the minhash of the document's
+        ``ngram_array_expr(text, 3)`` grams, the set the jaccard verify
+        compares; a NULL text gets no signature row."""
+        df = docs.unionByName(local_table(spark, [(100 + i, t) for i, t in _TEXTS],
+                                          "doc_id long, text string"))
+        grams = {r["doc_id"]: r["g"] for r in df.select(
+            "doc_id", ngram_array_expr(F.col("text"), 3).alias("g")).collect()}
+        sigs = {r["id"]: r["sig"] for r in dedup.minhash_signatures_pandas(df).collect()}
+        assert sigs == {i: _minhash_ref(g) for i, g in grams.items() if g is not None}
+
+    def test_string_ids_pair_like_long_ids(self, spark, docs):
+        """Ids pass through with their input type: a string-id copy of a
+        corpus gives the long-id copy's minhash pairs."""
+        str_docs = docs.select(F.format_string("d%02d", "doc_id").alias("doc_id"), "text")
+        sig = dedup.minhash_signatures_pandas(str_docs)
+        assert sig.schema["id"].dataType.simpleString() == "string"
+        kw = dict(threshold=0.3, num_hashes=32, bands=16)
+        want = {(f"d{a:02d}", f"d{b:02d}", j)
+                for a, b, j in dedup.minhash_dedup_pairs(docs, **kw).collect()}
+        got = {tuple(r) for r in dedup.minhash_dedup_pairs(str_docs, **kw).collect()}
+        assert want and got == want
+
+    def test_null_text_is_never_a_candidate(self, spark):
+        """A NULL text is not signed, so it pairs with nothing; empty texts
+        still pair with each other."""
+        df = local_table(spark, [(1, None), (2, None), (3, ""), (4, ""), (5, "a b c d"),
+                                 (6, "a b c d")], "doc_id long, text string")
+        cands = {tuple(r) for r in dedup.minhash_candidates(df).collect()}
+        assert cands == {(3, 4), (5, 6)}
+        pairs = {tuple(r) for r in dedup.minhash_dedup_pairs(df).collect()}
+        assert pairs == {(3, 4, 1.0), (5, 6, 1.0)}
+
+
 class TestTextstats:
     def test_counts_and_ratios(self, spark):
         df = spark.createDataFrame([(1, "The cat, and the dog!")], "doc_id long, text string")

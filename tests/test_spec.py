@@ -493,21 +493,15 @@ class TestPlanBuildCost:
 
         from logshipper_spark.operators.enrich import enrich
         from logshipper_spark.operators.parse import grok_native
-        from logshipper_spark.plans.spec import Pipeline
+        from logshipper_spark.plans.spec import DEMO_SPEC, Pipeline
         from logshipper_spark.sources.transcripts import role_dim, tool_dim
 
-        bench_spec = [
-            {"match": {"text": "^ERROR "}, "forward": ["errors"]},
-            {"match": {"text": "^<"}, "forward": ["syslog"]},
-            {"match": {"text": "^DEBUG "}, "drop": True},
-            {"forward": ["archive"]},
-        ]
         enriched = enrich(
             enrich(grok_native(transcripts), role_dim(spark), on="role"), tool_dim(spark), on="tool"
         )
 
         def optimized() -> str:
-            routed = compile_pipeline(bench_spec).routed(enriched)
+            routed = compile_pipeline(DEMO_SPEC).routed(enriched)
             plan = routed._jdf.queryExecution().optimizedPlan().toString()
             return re.sub(r"#\d+L?", "#", plan)
 

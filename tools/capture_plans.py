@@ -51,7 +51,7 @@ def main() -> None:
     from logshipper_spark.operators.enrich import enrich
     from logshipper_spark.operators.parse import grok_native
     from logshipper_spark.operators.route import with_bucket
-    from logshipper_spark.plans.spec import compile_pipeline
+    from logshipper_spark.plans.spec import DEMO_SPEC, compile_pipeline
     from logshipper_spark.sources.transcripts import (
         generate_transcripts, role_dim, tool_dim,
     )
@@ -59,12 +59,7 @@ def main() -> None:
     t = generate_transcripts(spark, n_convs=300, seed=42)
     enr = enrich(enrich(grok_native(t), role_dim(spark), on="role"),
                  tool_dim(spark), on="tool")
-    pipe = compile_pipeline([
-        {"match": {"text": "^ERROR "}, "forward": ["errors"]},
-        {"match": {"text": "^<"}, "forward": ["syslog"]},
-        {"match": {"text": "^DEBUG "}, "drop": True},
-        {"forward": ["archive"]},
-    ])
+    pipe = compile_pipeline(DEMO_SPEC)
     shaped = (
         with_bucket(pipe.routed(enr), n_buckets=8, salt_buckets=4)
         .repartition("sink", "bucket", "salt")

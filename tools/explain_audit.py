@@ -13,6 +13,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+_NO_PANDAS = ("no pandas boundary", r"MapInPandas|ArrowEvalPython [^\n]*, 200\b", False)
+
 CHECKS = {
     # predicate pushdown + column pruning reach the parquet scan
     "drop_filter": [
@@ -68,7 +70,15 @@ CHECKS = {
         ("no window", r"\bWindow\b", False),
         ("no global single-partition sort", r"Exchange SinglePartition", False),
         ("broadcast gram join", r"BroadcastHashJoin", True),
+        _NO_PANDAS,
     ],
+    # text kernels are Arrow UDFs (eval type 250), never a pandas_udf (200)
+    # or mapInPandas boundary
+    "contamination_check": [_NO_PANDAS],
+    "contamination_check_packed": [_NO_PANDAS],
+    "repetition_signals": [_NO_PANDAS],
+    "char_entropy": [_NO_PANDAS],
+    "doc_novelty": [_NO_PANDAS],
     # sequence packing: the prefix-sum window partitions on the shard —
     # never a global single-partition window (shard count scales with N)
     "pack_sequences": [
@@ -308,6 +318,20 @@ def extra_checks(spark, sf_dir: str) -> int:
     }
     for name, sink in sinks.items():
         check(f"ship_sink_{name}", "no global sort", _plan(sink), r"\bSort\b", False)
+
+    # 7. the text-kernel frames that queries reach only through a pin
+    # (minhash signatures, jaccard grams, paragraph chunks) cross into
+    # Python as Arrow, never through pandas
+    from logshipper_spark.functions.dedup import minhash_signatures_pandas
+    from logshipper_spark.functions.textstats import chunk_array_pandas, ngram_array_pandas
+
+    kernels = {
+        "minhash_signatures": minhash_signatures_pandas(docs),
+        "jaccard_grams": docs.select(ngram_array_pandas(3)(F.col("text"))),
+        "paragraph_chunks": docs.select(chunk_array_pandas(3)(F.col("text"))),
+    }
+    for name, frame in kernels.items():
+        check(f"text_kernel_{name}", _NO_PANDAS[0], _plan(frame), _NO_PANDAS[1], False)
 
     return bad
 

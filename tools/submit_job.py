@@ -40,7 +40,7 @@ def main() -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     from logshipper_spark.plans.runner import CheckpointedRunner
-    from logshipper_spark.plans.spec import compile_pipeline
+    from logshipper_spark.plans.spec import DEMO_SPEC, compile_pipeline
     from logshipper_spark.sources.tableio import TableIO
     from logshipper_spark.sources.transcripts import generate_transcripts
 
@@ -56,14 +56,7 @@ def main() -> None:
 
         pipe = PipelineManager().load_dir(args.pipeline_dir).get(args.pipeline)
     else:
-        pipe = compile_pipeline(
-            [
-                {"match": {"text": "^ERROR "}, "forward": ["errors"]},
-                {"match": {"text": "^<"}, "forward": ["syslog"]},
-                {"match": {"text": "^DEBUG "}, "drop": True},
-                {"forward": ["archive"]},
-            ]
-        )
+        pipe = compile_pipeline(DEMO_SPEC)
 
     from logshipper_spark.plans.spec import pipeline_sinks
 
