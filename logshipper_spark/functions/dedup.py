@@ -13,6 +13,11 @@ Four tiers, increasing fuzziness, each designed around its shuffle shape:
   near-dups share the fingerprint (or a rotated band of it).
 * **n-gram Jaccard**   — exact verification metric over candidate pairs.
 
+Every LSH tier — minhash bands, simhash chunks and
+``similarity.cosine_pairs``'s hyperplane sketches — finds its candidates
+through ONE bucket join, ``_bucket_pairs``: one pin of the bucketed rows,
+one self-join on the bucket key, one hub-star guard for oversize buckets.
+
 MinHash signatures and Jaccard grams come from Arrow kernels over ONE
 tokenizer and shingler (``textstats._words`` / ``textstats._grams``), so
 the signatures hash exactly the grams the verify stage compares
@@ -22,7 +27,9 @@ SimHash hashing stay JVM-side (xxhash64/md5, codegen).
 
 from __future__ import annotations
 
+import operator
 import zlib
+from functools import reduce
 
 import numpy as np
 import pyarrow as pa
@@ -145,48 +152,58 @@ def minhash_candidates(
             )
         ).alias("band_id", "band_hash"),
     )
-    # Materialize the banded signatures ONCE (r6 optimization, guide §2.4/
-    # §3.3): downstream this frame is consumed by the bucket stats
-    # aggregate, the stats join, BOTH sides of the candidate self-join and
-    # the hub-star branch — and because the small stats side broadcasts,
-    # no exchange-reuse ever fires, so Catalyst re-executed the WHOLE
-    # signature pipeline (the corpus-wide Arrow pass) once per consumer:
-    # SIX signature-pass nodes in the r6-before plan, measured 5.3 s vs
-    # 0.86 s for one signature pass at sf0.1.  localCheckpoint pins
-    # (id, band_id, band_hash) — 8 short rows per doc, never the text —
-    # and cuts the plan to ONE signature pass.  Recomputed from parquet
-    # on every invocation (no cross-run state).
-    banded = banded.localCheckpoint()
-    if not bucket_cap:
-        a, b = banded.alias("a"), banded.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
+    return _bucket_pairs(banded, ["band_id", "band_hash"], bucket_cap).distinct()
+
+
+def _bucket_pairs(items: DataFrame, keys: list[str], bucket_cap: int,
+                  carry: str | None = None) -> DataFrame:
+    """The LSH bucket join: every pair of ``items`` rows sharing a bucket.
+
+    ``items`` holds ``(id, [carry], *keys)`` rows, one per (item, bucket).
+    Returns NON-distinct ``(id_a, id_b[, a_<carry>, b_<carry>])`` pairs
+    with id_a < id_b (an item pair sharing several buckets repeats); the
+    ``carry`` column (a fingerprint, a vector) rides along so the verify
+    stage needs no lookup join.
+
+    ``bucket_cap=0`` is a plain self-join on ``keys``.  Otherwise ONE
+    aggregate per bucket gives its size, its hub (min id) and the hub's
+    carry (``min_by``); buckets of at most ``bucket_cap`` rows self-join,
+    larger ones emit (hub, member) star pairs — O(n) instead of O(n²) in
+    one task (see ``minhash_candidates`` for the recall trade).
+
+    ``items`` is pinned (localCheckpoint) once per call: it is consumed by
+    the bucket aggregate, the stats join, both self-join sides and the
+    star branch, and because the small stats side broadcasts no exchange
+    reuse fires, so Catalyst would re-run the whole upstream signature
+    pass (an Arrow pass over the corpus, 64 vote aggregates or a sketch
+    matmul) once per consumer — six signature passes in the unpinned
+    minhash plan, measured 5.3 s vs 0.86 s for one at sf0.1.  The pin
+    holds ids, bucket keys and the carry, never text, and is rebuilt on
+    every call (no cross-run state).
+    """
+    items = items.localCheckpoint()
+    pay = [carry] if carry else []
+    star = None
+    if bucket_cap:
+        stats = items.groupBy(*keys).agg(
+            F.count("*").alias("bn"), F.min("id").alias("hub"),
+            *[F.min_by(c, "id").alias(f"hub_{c}") for c in pay],
         )
-    # per-bucket size + hub in one aggregate; the groupBy exchange on the
-    # band key is reused by the subsequent joins (same partitioning)
-    stats = banded.groupBy("band_id", "band_hash").agg(
-        F.count("*").alias("bn"), F.min("id").alias("hub")
+        tagged = items.join(stats, keys)
+        star = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub"))).select(
+            F.col("hub").alias("id_a"), F.col("id").alias("id_b"),
+            *[F.col(f"hub_{c}").alias(f"a_{c}") for c in pay],
+            *[F.col(c).alias(f"b_{c}") for c in pay],
+        )
+        items = tagged.where(F.col("bn") <= bucket_cap)
+    a, b = items.alias("a"), items.alias("b")
+    cond = reduce(operator.and_, [F.col(f"a.{c}") == F.col(f"b.{c}") for c in keys]
+                  + [F.col("a.id") < F.col("b.id")])
+    pairs = a.join(b, cond).select(
+        F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
+        *[F.col(f"{side}.{c}").alias(f"{side}_{c}") for side in "ab" for c in pay],
     )
-    tagged = banded.join(stats, ["band_id", "band_hash"])
-    small = tagged.where(F.col("bn") <= bucket_cap)
-    a, b = small.alias("a"), small.alias("b")
-    pairs_small = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_hash") == F.col("b.band_hash"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    pairs_star = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub"))).select(
-        F.col("hub").alias("id_a"), F.col("id").alias("id_b")
-    )
-    return pairs_small.unionByName(pairs_star).distinct()
+    return pairs if star is None else pairs.unionByName(star)
 
 
 def jaccard(df_pairs: DataFrame, docs: DataFrame, text_col: str = "text",
@@ -273,45 +290,11 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.8, **kw) -> DataFram
 
 
 # -------------------------------------------------------------- simhash --
-def simhash64(text_col: Column) -> Column:
-    """64-bit SimHash via per-bit voting over token hashes — ONE pass.
-
-    Pure column expressions: tokens → xxhash64 → 64-char two's-complement
-    bit string (``bin``) → zip_with accumulates ±1 votes per bit → sign
-    bits re-packed as a 16-char hex fingerprint (string key; a production
-    variant packs to long, but variable-distance shifts on signed longs
-    aren't expressible as built-ins, and a 16-byte key shuffles just as
-    well).  Narrow, no shuffle.
-    """
-    toks = F.filter(
-        F.split(F.lower(F.regexp_replace(text_col, r"[^A-Za-z0-9\s]+", " ")), r"\s+"),
-        lambda t: t != "",
-    )
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(
-            acc,
-            F.split(F.lpad(F.bin(F.xxhash64(t)), 64, "0"), "(?!^)"),
-            lambda a, c: a + F.when(c == "1", 1).otherwise(-1),
-        ),
-    )
-    bits = F.aggregate(
-        votes, F.lit(""), lambda acc, v: F.concat(acc, F.when(v > 0, "1").otherwise("0"))
-    )
-    # hex-pack halves separately: conv() on the full 64 bits overflows the
-    # signed long under ANSI mode
-    return F.concat(
-        F.lpad(F.conv(F.substring(bits, 1, 32), 2, 16), 8, "0"),
-        F.lpad(F.conv(F.substring(bits, 33, 32), 2, 16), 8, "0"),
-    )
-
-
 def simhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", hash_fn: str = "xxhash64") -> DataFrame:
-    """(id, simhash hex) via explode + 64 codegen'd vote aggregates — the
-    scale path (the Column form above pays interpreted-lambda cost per
-    token × bit).
+    """(id, simhash hex) via explode + 64 codegen'd vote aggregates (the
+    interpreted ``zip_with`` Column form, kept as the test reference, pays
+    interpreted-lambda cost per token × bit).
 
     Per token row: one hash; the 64 ``sum(±1)`` aggregates test a
     LITERAL bit each (shiftright with a constant is codegen'd).  Shuffle
@@ -467,49 +450,14 @@ def simhash_near_duplicates(
     if not 1 <= chunks <= 16:
         raise ValueError("max_hamming must be in [0, 15] (16 hex chars)")
     sh = simhash_signatures(df, text_col, id_col, hash_fn=hash_fn)
-    # one row per doc (id + 16-char hex); consumed by the chunk explode,
-    # the bucket stats join, both self-join sides and the hub-star lookup
-    # — same repeated-subtree recompute as minhash_candidates (the 64
-    # vote aggregates re-ran per consumer).  Pin it once per invocation.
-    sh = sh.localCheckpoint()
     width = 16 // chunks  # hex chars per chunk; remainder folds into the last
     bounds = [(c * width + 1, width if c < chunks - 1 else 16 - (chunks - 1) * width)
               for c in range(chunks)]
     chunk_arr = F.array(*[F.substring("simhash", s, w) for s, w in bounds])
     banded = sh.select("id", "simhash", F.posexplode(chunk_arr).alias("chunk_id", "chunk_val"))
-    stats = banded.groupBy("chunk_id", "chunk_val").agg(
-        F.count("*").alias("bn"), F.min("id").alias("hub")
-    )
-    tagged = banded.join(stats, ["chunk_id", "chunk_val"])
-    small = tagged.where(F.col("bn") <= bucket_cap) if bucket_cap else tagged
-    a, b = small.alias("a"), small.alias("b")
-    cand_small = a.join(
-        b,
-        (F.col("a.chunk_id") == F.col("b.chunk_id"))
-        & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-        & (F.col("a.id") < F.col("b.id")),
-    ).select(
-        F.col("a.id").alias("id_a"),
-        F.col("b.id").alias("id_b"),
-        F.col("a.simhash").alias("sim_a"),
-        F.col("b.simhash").alias("sim_b"),
-    )
-    cand = cand_small
-    if bucket_cap:
-        big = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub")))
-        sh_short = sh.withColumnsRenamed({"id": "hub_join_id", "simhash": "hub_sim"})
-        cand_star = (
-            big.join(sh_short, big["hub"] == sh_short["hub_join_id"])
-            .select(
-                F.least("hub", "id").alias("id_a"),
-                F.greatest("hub", "id").alias("id_b"),
-                F.col("hub_sim").alias("sim_a"),
-                F.col("simhash").alias("sim_b"),
-            )
-        )
-        cand = cand_small.unionByName(cand_star)
+    cand = _bucket_pairs(banded, ["chunk_id", "chunk_val"], bucket_cap, carry="simhash")
     return (
-        cand.withColumn("hamming", hamming64_hex(F.col("sim_a"), F.col("sim_b")))
+        cand.withColumn("hamming", hamming64_hex(F.col("a_simhash"), F.col("b_simhash")))
         .where(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .distinct()

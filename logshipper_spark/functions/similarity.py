@@ -37,6 +37,7 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from logshipper_spark.functions.dedup import _bucket_pairs
 from logshipper_spark.sources.local import local_table
 
 
@@ -417,7 +418,8 @@ def cosine_pairs(
     tables: int = 2,
 ) -> DataFrame:
     """Embedding near-dup pairs: LSH-bucketed self-join (equi-join on the
-    sketch → only same-bucket pairs shuffle), exact cosine verify ≥ t.
+    sketch → only same-bucket pairs shuffle, through the shared
+    ``dedup._bucket_pairs``), exact cosine verify ≥ t.
 
     Scale shape:
     * ``bits=None`` derives the sketch width from the corpus size (one
@@ -438,44 +440,14 @@ def cosine_pairs(
         sk = hyperplane_sketches(
             df, bits=bits, seed=11 + 97 * t, vec_col=vec_col, id_col=id_col
         )
-        # sk is consumed by the bucket stats, the tagged join, both
-        # candidate self-join sides and the hub-vector lookup — without a
-        # pin the sketch matmul pipeline re-runs once per consumer (r6,
-        # same repeated-subtree fix as minhash_candidates)
-        sk = sk.localCheckpoint()
-        if bucket_cap:
-            stats = sk.groupBy("sketch").agg(F.count("*").alias("bn"), F.min("id").alias("hub"))
-            tagged = sk.join(stats, "sketch")
-            small = tagged.where(F.col("bn") <= bucket_cap)
-            a, b = small.alias("a"), small.alias("b")
-            pairs_small = a.join(
-                b, (F.col("a.sketch") == F.col("b.sketch")) & (F.col("a.id") < F.col("b.id"))
-            ).select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            )
-            big = tagged.where((F.col("bn") > bucket_cap) & (F.col("id") != F.col("hub")))
-            hub_vecs = sk.select(F.col("id").alias("hub_id"), F.col("v").alias("hub_v"))
-            pairs_star = big.join(hub_vecs, big["hub"] == hub_vecs["hub_id"]).select(
-                F.col("hub").alias("id_a"), F.col("id").alias("id_b"),
-                F.col("hub_v").alias("va"), F.col("v").alias("vb"),
-            )
-            t_pairs = pairs_small.unionByName(pairs_star)
-        else:
-            a, b = sk.alias("a"), sk.alias("b")
-            t_pairs = a.join(
-                b, (F.col("a.sketch") == F.col("b.sketch")) & (F.col("a.id") < F.col("b.id"))
-            ).select(
-                F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"),
-                F.col("a.v").alias("va"), F.col("b.v").alias("vb"),
-            )
+        t_pairs = _bucket_pairs(sk, ["sketch"], bucket_cap, carry="v")
         cand = t_pairs if cand is None else cand.unionByName(t_pairs)
     # vectorized exact verify (r6): the interpreted column-form cosine
     # pays per-element HOF evals on every candidate pair — the dominant
     # cost on dup-heavy corpora; differentially verified equal at 6
     # places over 212k pairs
     return (
-        pairwise_cosine(cand.dropDuplicates(["id_a", "id_b"]))
+        pairwise_cosine(cand.dropDuplicates(["id_a", "id_b"]), va_col="a_v", vb_col="b_v")
         .select("id_a", "id_b", F.round("cosine_sim", 6).alias("cosine_sim"))
         .where(F.col("cosine_sim") >= threshold)
     )

@@ -200,21 +200,22 @@ def bigram_lm(
     normalizers (prefix sums, distinct-V) are windows over that bounded
     aggregate.  Documents never concatenate across ids — bigrams do not
     cross document boundaries."""
-    pairs = (
-        _doc_bigrams(df, text_col, id_col)
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("n"))
-    )
-    # pairs feeds the V aggregate AND the prob projection (via broadcast,
-    # so nothing is shared): pin the bounded (w1, w2, n) table once or the
-    # corpus-wide tokenize+lag pipeline runs twice (r6, same fix as
-    # bigram_perplexity)
-    pairs = pairs.localCheckpoint()
+    return _add_k_lm(_doc_bigrams(df, text_col, id_col), add_k)
+
+
+def _add_k_lm(occ: DataFrame, add_k: float) -> DataFrame:
+    """(w1, w2, n, p): the add-k table over bigram occurrences ``occ`` —
+    ``bigram_lm``'s published table and ``bigram_perplexity``'s scorer.
+
+    The (w1, w2, n) counts feed the V aggregate AND the prob projection,
+    both via broadcast, so nothing is shared: pin the bounded counts once
+    or the corpus-wide tokenize+lag pipeline runs twice (r6).  V is a
+    broadcast 1-row aggregate: a collect_set window would carry the whole
+    vocabulary per output row — O(|vocab|³) cells at scale."""
+    counts = occ.groupBy("w1", "w2").agg(F.count("*").alias("n")).localCheckpoint()
     prefix_w = Window.partitionBy("w1")
-    # V as a broadcast 1-row aggregate: a collect_set window would carry
-    # the whole vocabulary per output row — O(|vocab|³) cells at scale
-    v = pairs.agg(F.countDistinct("w2").alias("_v"))
-    return pairs.join(F.broadcast(v)).select(
+    v = counts.agg(F.countDistinct("w2").alias("_v"))
+    return counts.join(F.broadcast(v)).select(
         "w1",
         "w2",
         "n",
@@ -249,24 +250,13 @@ def bigram_perplexity(
     per-document aggregate is partial-agg friendly.  Documents with fewer
     than two tokens have no bigrams and are absent — same in any oracle."""
     occ = _doc_bigrams(df, text_col, id_col)
-    # occ feeds the LM counts AND the scoring probe, counts feeds the
-    # vocabulary size AND the prob table — all via broadcasts, so nothing
-    # is shared and the tokenize+lag pipeline re-ran 3× (r6-before plan:
-    # 3 document scans).  Pinning both cuts it to one pass; measured
-    # interleaved A/B at 10× bench scale: 1.86 s → 1.55 s best-of-3.
+    # occ feeds the LM counts AND the scoring probe via broadcasts, so
+    # nothing is shared and the tokenize+lag pipeline re-ran 3× (r6-before
+    # plan: 3 document scans).  Pinning occ (and, in _add_k_lm, the counts)
+    # cuts it to one pass; measured interleaved A/B at 10× bench scale:
+    # 1.86 s → 1.55 s best-of-3.
     occ = occ.localCheckpoint()
-    counts = occ.groupBy("w1", "w2").agg(F.count("*").alias("n")).localCheckpoint()
-    prefix_w = Window.partitionBy("w1")
-    v = counts.agg(F.countDistinct("w2").alias("_v"))
-    lm = counts.join(F.broadcast(v)).select(
-        "w1",
-        "w2",
-        F.round(
-            (F.col("n") + F.lit(add_k))
-            / (F.sum("n").over(prefix_w) + F.lit(add_k) * F.col("_v")),
-            6,
-        ).alias("p"),
-    )
+    lm = _add_k_lm(occ, add_k).select("w1", "w2", "p")
     nll = F.avg(-F.log(F.col("p")))
     return (
         occ.join(F.broadcast(lm), ["w1", "w2"])

@@ -7,17 +7,50 @@ from logshipper_spark.functions import dedup, multimodal, similarity, textstats
 from logshipper_spark.sources.local import local_table
 
 
+def tokens_expr(col):
+    """Lowercased ASCII word tokens as a pure JVM expression — the
+    ``textstats._words`` tokenizer, shared by the two Column references
+    below."""
+    toks = F.split(F.lower(F.regexp_replace(col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
+    return F.filter(toks, lambda t: t != "")
+
+
 def ngram_array_expr(col, n: int):
     """Distinct word n-grams as a pure JVM expression — the row-for-row
     reference for ``textstats.ngram_array_pandas``.  Too slow for a hot
     path: ``F.transform``'s interpreted lambda re-evaluates the tokenize
     subexpression per element.  NULL text gives a NULL array, as in the
     kernel (an unguarded ``split(NULL)`` chain yields ``['']``)."""
-    toks = F.split(F.lower(F.regexp_replace(col, r"[^A-Za-z0-9\s]+", " ")), r"\s+")
-    toks = F.filter(toks, lambda t: t != "")
+    toks = tokens_expr(col)
     idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
     grams = F.array_distinct(F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, n))))
     return F.when(col.isNotNull(), grams)
+
+
+def simhash64(col):
+    """64-bit SimHash as a pure JVM expression — the row-for-row reference
+    for ``dedup.simhash_signatures`` (xxhash64 leaf).  Too slow for a hot
+    path: the ``zip_with`` lambda accumulates ±1 votes per token × bit,
+    interpreted.  Tokens → xxhash64 → 64-char two's-complement bit string
+    (``bin``) → per-bit votes → sign bits re-packed as 16 hex chars, in two
+    32-bit halves (``conv`` on all 64 bits overflows the signed long under
+    ANSI mode)."""
+    votes = F.aggregate(
+        tokens_expr(col),
+        F.array_repeat(F.lit(0), 64),
+        lambda acc, t: F.zip_with(
+            acc,
+            F.split(F.lpad(F.bin(F.xxhash64(t)), 64, "0"), "(?!^)"),
+            lambda a, c: a + F.when(c == "1", 1).otherwise(-1),
+        ),
+    )
+    bits = F.aggregate(
+        votes, F.lit(""), lambda acc, v: F.concat(acc, F.when(v > 0, "1").otherwise("0"))
+    )
+    return F.concat(
+        F.lpad(F.conv(F.substring(bits, 1, 32), 2, 16), 8, "0"),
+        F.lpad(F.conv(F.substring(bits, 33, 32), 2, 16), 8, "0"),
+    )
 
 
 def cosine(a, b):
@@ -46,6 +79,17 @@ def docs(spark):
         (6, ""),                                                     # empty
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+@pytest.fixture(scope="module")
+def emb(spark):
+    import math
+
+    rows = []
+    for i in range(50):
+        a = (i % 10) / 10.0 * math.pi / 2
+        rows.append((i, [math.cos(a), math.sin(a), 0.0, 0.0]))
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
 
 class TestDedup:
@@ -112,7 +156,7 @@ class TestDedup:
 
     def test_simhash_identical_for_dups(self, docs):
         sh = {r["doc_id"]: r["sh"] for r in docs.select(
-            "doc_id", dedup.simhash64(F.col("text")).alias("sh")).collect()}
+            "doc_id", simhash64(F.col("text")).alias("sh")).collect()}
         assert sh[0] == sh[1] == sh[2]  # token multiset identical after norm
         assert sh[0] != sh[4]
         assert len(sh[0]) == 16  # 64-bit hex
@@ -210,12 +254,36 @@ class TestBucketCap:
         assert got == {(0, i) for i in range(1, 1000)}
         assert wall < 120, f"flood bucket took {wall:.0f}s"
 
-    def test_minhash_cap_does_not_change_small_buckets(self, docs):
-        capped = dedup.minhash_dedup_pairs(docs, threshold=0.3, num_hashes=32, bands=16,
-                                           bucket_cap=100)
-        uncapped = dedup.minhash_dedup_pairs(docs, threshold=0.3, num_hashes=32, bands=16,
-                                             bucket_cap=0)
-        assert {tuple(r) for r in capped.collect()} == {tuple(r) for r in uncapped.collect()}
+    # (fixture, pairs(frame, bucket_cap)) for each LSH path
+    CAPPED = {
+        "minhash": ("docs", lambda df, cap: dedup.minhash_dedup_pairs(
+            df, threshold=0.3, num_hashes=32, bands=16, bucket_cap=cap)),
+        "simhash": ("docs", lambda df, cap: dedup.simhash_near_duplicates(
+            df, max_hamming=8, bucket_cap=cap)),
+        "cosine": ("emb", lambda df, cap: similarity.cosine_pairs(
+            df, threshold=0.999, bits=4, bucket_cap=cap)),
+    }
+
+    @pytest.mark.parametrize("path", list(CAPPED))
+    def test_minhash_cap_does_not_change_small_buckets(self, request, path):
+        fixture, pairs = self.CAPPED[path]
+        df = request.getfixturevalue(fixture)
+        capped = {tuple(r) for r in pairs(df, 100).collect()}
+        assert capped == {tuple(r) for r in pairs(df, 0).collect()}
+        assert capped, "fixture must produce pairs"
+
+    @pytest.mark.parametrize("id_type", ["long", "string"])
+    def test_simhash_flood_bucket_star(self, spark, id_type):
+        # 400 identical docs flood every chunk bucket: only (hub, member)
+        # star pairs come back, verified against the hub's fingerprint,
+        # which comes from the bucket aggregate itself
+        key = int if id_type == "long" else str
+        rows = [(key(i), "the same boilerplate text repeated everywhere") for i in range(400)]
+        rows += [(key(1000), "a genuinely different document about spark")]
+        df = spark.createDataFrame(rows, f"doc_id {id_type}, text string")
+        pairs = dedup.simhash_near_duplicates(df, max_hamming=3, bucket_cap=50).collect()
+        assert {(r["id_a"], r["id_b"]) for r in pairs} == {(key(0), key(i)) for i in range(1, 400)}
+        assert {r["hamming"] for r in pairs} == {0}
 
     def test_cosine_pairs_flood_bucket_star(self, spark):
         rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(500)]
@@ -227,16 +295,6 @@ class TestBucketCap:
 
 
 class TestSimilarity:
-    @pytest.fixture(scope="class")
-    def emb(self, spark):
-        import math
-
-        rows = []
-        for i in range(50):
-            a = (i % 10) / 10.0 * math.pi / 2
-            rows.append((i, [math.cos(a), math.sin(a), 0.0, 0.0]))
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
     def test_bruteforce_topk_exact(self, emb):
         out = similarity.cosine_topk(emb, [1.0, 0.0, 0.0, 0.0], k=5).collect()
         assert out[0]["cosine_sim"] == 1.0  # angle-0 vectors first
@@ -775,7 +833,7 @@ class TestSignaturePaths:
     def test_simhash_column_and_df_paths_agree(self, spark, docs):
         col_sh = {
             r["doc_id"]: r["sh"]
-            for r in docs.select("doc_id", dedup.simhash64(F.col("text")).alias("sh")).collect()
+            for r in docs.select("doc_id", simhash64(F.col("text")).alias("sh")).collect()
             if r["sh"] is not None
         }
         df_sh = {r["id"]: r["simhash"] for r in dedup.simhash_signatures(docs).collect()}

@@ -333,6 +333,28 @@ def extra_checks(spark, sf_dir: str) -> int:
     for name, frame in kernels.items():
         check(f"text_kernel_{name}", _NO_PANDAS[0], _plan(frame), _NO_PANDAS[1], False)
 
+    # 8. the simhash chunk explode runs ONCE, inside the bucket join's pin:
+    # an explode after the pin re-runs in every branch of the join.  A pin
+    # hides its input plan (Scan ExistingRDD), so the plans of the frames
+    # pinned while building the query are read too.
+    from logshipper_spark.queries import QUERIES
+
+    frame_cls, pinned = type(docs), []
+    pin = frame_cls.localCheckpoint
+
+    def spy(frame, *args, **kwargs):
+        pinned.append(_plan(frame))
+        return pin(frame, *args, **kwargs)
+
+    frame_cls.localCheckpoint = spy
+    try:
+        sp = _plan(QUERIES["simhash_near_dups"](spark, sf_dir))
+    finally:
+        frame_cls.localCheckpoint = pin
+    check("simhash_near_dups", "one chunk explode, pins included",
+          "|".join(re.findall(r"Generate posexplode", "\n".join(pinned + [sp]))),
+          r"^Generate posexplode$", True)
+
     return bad
 
 
