@@ -39,17 +39,6 @@ from logshipper_spark.functions.textstats import _grams, _words, fingerprint, ng
 
 
 # ---------------------------------------------------------------- exact --
-def exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Group by normalized fingerprint; keep the min-id canonical doc.
-    Returns (fp, keep_id, n_dups) for groups with >1 member."""
-    return (
-        df.select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
-        .groupBy("fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_dups"))
-        .where(F.col("n_dups") > 1)
-    )
-
-
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Return the deduplicated set: one doc (min id) per fingerprint."""
     keep = (

@@ -546,27 +546,6 @@ class IVFIndex:
         return cosine_topk(cand, query, k, self.vec_col, self.id_col)
 
 
-def ivf_topk(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 42,
-    index: IVFIndex | None = None,
-):
-    """IVF approximate top-k.  Pass a prebuilt ``index`` (IVFIndex.build)
-    to amortize the quantizer across queries; building inline here is the
-    self-contained single-query form (train-once is the scale path)."""
-    if index is None:
-        index = IVFIndex.build(
-            df, n_cells=n_cells, vec_col=vec_col, id_col=id_col, seed=seed
-        )
-    return index.topk(query, k=k, n_probe=n_probe)
-
-
 def embedding_decontam(
     train: DataFrame,
     bench: DataFrame,

@@ -63,14 +63,14 @@ def timer_percentiles(df: DataFrame, value_col: str, group_col: str | None = Non
     return src.groupBy(group_col).agg(*aggs) if group_col else src.agg(*aggs)
 
 
-def gauge_last(df: DataFrame, key: str, value_col: str, ts_col: str = "ts") -> DataFrame:
-    """Gauge: last observed value per key — ``max_by`` avoids a window
-    shuffle+sort (single hash aggregate)."""
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(key)
-        .agg(F.max_by(value_col, F.col(ts_col)).alias("last_value"),
-             F.max(ts_col).alias("last_ts"))
+def gauge_last(df: DataFrame, key: str, value_col: str,
+               order: tuple[str, ...] = ("ts",)) -> DataFrame:
+    """Gauge: the value of the last row per key under ``order`` (later
+    columns break ties), NULL when that row's value is NULL — what a statsd
+    gauge flushes.  ``max_by`` over ``struct(*order)`` is one aggregate,
+    no window shuffle+sort."""
+    return df.groupBy(key).agg(
+        F.max_by(value_col, F.struct(*order)).alias("last_value")
     )
 
 
@@ -337,14 +337,6 @@ def ewma_smooth(
         num = num + F.coalesce(lagv * F.lit(decay**j), F.lit(0.0))
         den = den + F.when(lagv.isNotNull(), F.lit(decay**j)).otherwise(F.lit(0.0))
     return df.withColumn("ewma", F.round(num / den, 6))
-
-
-def top_k_conversations(df: DataFrame, k: int = 10) -> DataFrame:
-    """Top-k longest conversations — aggregate FIRST (shrinks to one row per
-    conv), then a single global window over the small aggregate."""
-    sizes = df.groupBy("conv_id").agg(F.count("*").alias("n_turns"))
-    w = Window.orderBy(F.desc("n_turns"), F.asc("conv_id"))
-    return sizes.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
 def trailing_rate(

@@ -6,6 +6,11 @@ Each Spark callable takes ``(spark, sf_dir)`` and returns a DataFrame whose
 column NAMES and values match the DuckDB oracle SQL exactly (the driver
 hashes values order-insensitively after sorting columns by name).
 
+An entry calls the shipped operator (the spec compiler, parse, aggregate,
+enrich, ...) and adds only the projection its oracle needs (column names,
+string formats), so the oracle hash checks the code that ships, not a
+copy.  An entry that stays hand-written says why in its docstring.
+
 Parity rules applied throughout:
 * session timezone pinned to UTC; timestamps returned as formatted strings
 * computed doubles rounded to 6 (both sides); embedding math forced to
@@ -23,6 +28,9 @@ from pyspark.sql.window import Window
 
 from logshipper_spark.functions import dedup, similarity, textstats
 from logshipper_spark.operators import aggregate as agg
+from logshipper_spark.operators.enrich import enrich
+from logshipper_spark.operators.parse import decode_syslog_pri
+from logshipper_spark.plans.spec import Pipeline, compile_pipeline
 from logshipper_spark.sources.local import local_table
 
 
@@ -56,11 +64,12 @@ def q(name: str, oracle: str | None = None):
        FROM events""",
 )
 def match_extract(spark, sf_dir):
-    """match: named-group regex extraction → new field (SURVEY §2.2 match)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select(
-        "event_id",
-        F.regexp_extract("props", '"k": ([0-9]+)', 1).try_cast("int").alias("k_val"),
+    """match: named-group regex extraction → new field (SURVEY §2.2 match).
+    An unmatched or NULL ``props`` leaves ``k_val`` NULL, the oracle's
+    ``TRY_CAST('')``."""
+    pipe = compile_pipeline([{"match": {"props": '"k": (?P<k_val>[0-9]+)'}}])
+    return pipe.surviving(_t(spark, sf_dir, "events")).select(
+        "event_id", F.col("k_val").try_cast("int").alias("k_val")
     )
 
 
@@ -71,7 +80,9 @@ def match_extract(spark, sf_dir):
        FROM events""",
 )
 def set_template(spark, sf_dir):
-    """set: template interpolation {field}/{1} → new field (SURVEY §2.2 set)."""
+    """set: template interpolation {field}/{1} → new field (SURVEY §2.2 set).
+    Hand-written: the spec's ``set`` runs only on rows its step matched,
+    while the oracle renders ``type/`` for a ``props`` without ``"k": N``."""
     ev = _t(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -86,7 +97,10 @@ def set_template(spark, sf_dir):
     "SELECT event_id, event_type FROM events WHERE event_type <> 'error'",
 )
 def drop_filter(spark, sf_dir):
-    """drop: predicate filter, pushed to the scan (SURVEY §2.2 drop)."""
+    """drop: predicate filter, pushed to the scan (SURVEY §2.2 drop).
+    Hand-written: the spec's ``drop`` compiles to ``NOT (event_type RLIKE
+    '^error$' <=> true)``, which parquet cannot take as a pushed filter;
+    tools/explain_audit.py pins the pushed ``Not(EqualTo)``."""
     ev = _t(spark, sf_dir, "events")
     return ev.where(F.col("event_type") != "error").select("event_id", "event_type")
 
@@ -96,9 +110,13 @@ def drop_filter(spark, sf_dir):
     "SELECT event_id, regexp_replace(props, '[0-9]+', 'N', 'g') AS redacted FROM events",
 )
 def replace_redact(spark, sf_dir):
-    """replace: regex span replacement (SURVEY §2.2 replace)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.select("event_id", F.regexp_replace("props", "[0-9]+", "N").alias("redacted"))
+    """replace: regex span replacement (SURVEY §2.2 replace); a row without
+    a digit run keeps its ``props``, which is what the oracle's replace
+    gives it."""
+    pipe = compile_pipeline([{"match": {"props": "[0-9]+"}, "replace": "N"}])
+    return pipe.surviving(_t(spark, sf_dir, "events")).select(
+        "event_id", F.col("props").alias("redacted")
+    )
 
 
 @q(
@@ -107,7 +125,8 @@ def replace_redact(spark, sf_dir):
        FROM events""",
 )
 def mangle_chain(spark, sf_dir):
-    """strip+rename chained mangles as pure projections (SURVEY §2.2)."""
+    """strip+rename chained mangles as pure projections (SURVEY §2.2).
+    Hand-written: the spec has no ``upper`` handler."""
     ev = _t(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -139,17 +158,11 @@ def json_extract(spark, sf_dir):
 )
 def syslog_pri_decode(spark, sf_dir):
     """syslog PRI decode: facility/severity arithmetic + name lookup
-    (SURVEY §2.1 syslog input)."""
+    (SURVEY §2.1 syslog input) through ``parse.decode_syslog_pri``."""
     ev = _t(spark, sf_dir, "events")
-    sev_names = ["emerg", "alert", "crit", "err", "warning", "notice", "info", "debug"]
-    pri = F.pmod(F.col("event_id"), F.lit(192))
-    sev = F.pmod(pri, F.lit(8)).cast("int")
-    return ev.select(
-        "event_id",
-        pri.alias("pri"),
-        sev.alias("severity"),
-        F.floor(pri / 8).cast("int").alias("facility"),
-        F.element_at(F.array(*[F.lit(s) for s in sev_names]), sev + 1).alias("severity_name"),
+    pri = ev.select("event_id", F.pmod("event_id", F.lit(192)).alias("pri"))
+    return decode_syslog_pri(pri).select(
+        "event_id", "pri", "severity", "facility", "severity_name"
     )
 
 
@@ -166,19 +179,18 @@ def syslog_pri_decode(spark, sf_dir):
        SELECT 'billing' AS sink, count(*) AS n FROM events WHERE event_type = 'purchase'""",
 )
 def route_fanout(spark, sf_dir):
-    """multi-sink redistribute: sinks array + explode, per-sink counts
-    (SURVEY §2.6 union/fan-out).  The counts right-join the literal sink
-    list with coalesce(0) so a sink with ZERO matching events still emits
-    its row — the oracle's scalar count(*) always does, and structural
-    parity must not depend on every event type existing in the testdata
-    (r4 review finding)."""
-    ev = _t(spark, sf_dir, "events")
-    sinks = F.concat(
-        F.array(F.lit("archive")),
-        F.when(F.col("event_type") == "error", F.array(F.lit("errors"))).otherwise(F.array()),
-        F.when(F.col("event_type") == "purchase", F.array(F.lit("billing"))).otherwise(F.array()),
-    )
-    counts = ev.withColumn("sink", F.explode(sinks)).groupBy("sink").agg(
+    """multi-sink redistribute: the spec's forwards fan each event out to
+    its sinks, counted per sink (SURVEY §2.6 union/fan-out).  The counts
+    right-join the literal sink list with coalesce(0) so a sink with ZERO
+    matching events still emits its row — the oracle's scalar count(*)
+    always does, and structural parity must not depend on every event
+    type existing in the testdata."""
+    pipe = compile_pipeline([
+        {"forward": ["archive"]},
+        {"match": {"event_type": "^error$"}, "forward": ["errors"]},
+        {"match": {"event_type": "^purchase$"}, "forward": ["billing"]},
+    ])
+    counts = pipe.routed(_t(spark, sf_dir, "events")).groupBy("sink").agg(
         F.count("*").alias("n")
     )
     all_sinks = local_table(spark, [("archive",), ("errors",), ("billing",)], "sink string")
@@ -208,10 +220,10 @@ def counter_by_type(spark, sf_dir):
 )
 def events_per_minute(spark, sf_dir):
     """tumbling 1-minute window counter (SURVEY §2.4 events-per-minute)."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy(
-        F.date_format(F.date_trunc("minute", "ts"), "yyyy-MM-dd HH:mm:ss").alias("minute")
-    ).agg(F.count("*").alias("n_events"))
+    out = agg.events_per_minute(_t(spark, sf_dir, "events"))
+    return out.select(
+        F.date_format("minute", "yyyy-MM-dd HH:mm:ss").alias("minute"), "n_events"
+    )
 
 
 @q(
@@ -334,14 +346,8 @@ def timer_percentiles(spark, sf_dir):
        QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1""",
 )
 def gauge_last(spark, sf_dir):
-    """statsd gauge: last value per key, deterministic tiebreak (SURVEY §2.4)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("user_id", F.col("value").alias("last_value"))
-    )
+    """statsd gauge: last value per key, event_id tiebreak (SURVEY §2.4)."""
+    return agg.gauge_last(_t(spark, sf_dir, "events"), "user_id", "value", ("ts", "event_id"))
 
 
 @q(
@@ -382,14 +388,17 @@ def stable_order_rownum(spark, sf_dir):
        GROUP BY user_id""",
 )
 def edge_detect(spark, sf_dir):
-    """edge: stateful change-detection via lag (SURVEY §2.2 edge)."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return (
-        ev.withColumn("prev", F.lag("event_type").over(w))
-        .where(F.col("prev").isNull() | (F.col("prev") != F.col("event_type")))
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_changes"))
+    """edge: stateful change-detection (SURVEY §2.2 edge), every change
+    forwarded and counted per user.  The trigger template renders a NULL
+    ``event_type`` as '', where the oracle's ``lag`` compares SQL NULLs:
+    the two agree on click→NULL→NULL→click but not on click→NULL→click
+    (the testdata has no NULL event_type)."""
+    pipe = Pipeline(
+        [{"edge": {"trigger": "{event_type}", "key": "user_id"}, "forward": ["chg"]}],
+        order_keys=("ts", "event_id"),
+    )
+    return pipe.routed(_t(spark, sf_dir, "events")).groupBy("user_id").agg(
+        F.count("*").alias("n_changes")
     )
 
 
@@ -545,9 +554,8 @@ _KIND_DIM = [
 )
 def enrich_lookup(spark, sf_dir):
     """lookup enrichment as a broadcast hash join (SURVEY §2.3)."""
-    ev = _t(spark, sf_dir, "events")
     dim = local_table(spark, _KIND_DIM, "event_type string, kind string")
-    return ev.join(F.broadcast(dim), "event_type", "left").select("event_id", "kind")
+    return enrich(_t(spark, sf_dir, "events"), dim, "event_type").select("event_id", "kind")
 
 
 @q(
@@ -1673,11 +1681,12 @@ def approx_distinct_hll(spark, sf_dir):
 def sampled_counter(spark, sf_dir):
     """statsd rate-sampled counter (logshipper statsd `rate` [approx]):
     hash-deterministic 25% sample — reruns/resumes pick identical rows,
-    unlike rand()-based sampling."""
+    unlike rand()-based sampling.  The spec's ``sample`` handler hashes
+    with xxhash64, which DuckDB cannot reproduce; this entry checks the
+    md5 basis ``textstats.deterministic_hash_pct``."""
     ev = _t(spark, sf_dir, "events")
-    h = F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10).cast("bigint")
     return (
-        ev.where(F.pmod(h, F.lit(100)) < 25)
+        ev.where(textstats.deterministic_hash_pct(F.col("event_id")) < 25)
         .groupBy("event_type")
         .agg(F.count("*").alias("n"))
     )
@@ -1736,8 +1745,6 @@ def call_pipeline(spark, sf_dir):
     """gated call/jump subroutine (SURVEY §2.2): only rows matching the
     calling step enter the sub-pipeline; a drop inside the sub suppresses
     the same-step forward (plans/spec.py call handler)."""
-    from logshipper_spark.plans.spec import compile_pipeline
-
     ev = _t(spark, sf_dir, "events")
     sub = compile_pipeline(
         [{"match": {"event_type": "^error$"}, "drop": True}, {"set": {"note": "ok"}}]
@@ -1758,8 +1765,6 @@ def call_pipeline(spark, sf_dir):
 def python_rewrite_sql(spark, sf_dir):
     """python rewrite, sql lowering path (operators/pyexpr.py): stays in
     whole-stage codegen."""
-    from logshipper_spark.plans.spec import compile_pipeline
-
     ev = _t(spark, sf_dir, "events")
     pipe = compile_pipeline(
         [{"python": {"field": "tag",
@@ -1775,8 +1780,6 @@ def python_rewrite_sql(spark, sf_dir):
 def python_rewrite_expr(spark, sf_dir):
     """python rewrite, pandas lowering path (operators/pyexpr.py): the
     AST-validated expression subset compiled ONCE into an Arrow pandas_udf."""
-    from logshipper_spark.plans.spec import compile_pipeline
-
     ev = _t(spark, sf_dir, "events")
     pipe = compile_pipeline(
         [{"python": {"field": "shout", "expr": "event_type.str.upper() + '!'"}}]
@@ -1798,10 +1801,8 @@ _TOOL_DIM = [("click", "browser"), ("purchase", "checkout"), ("error", "debugger
 def tool_invocations_q(spark, sf_dir):
     """tool-invocation counter (north star aggregate): enrich a tool column
     via broadcast dim, count non-null per tool (operators/aggregate.py)."""
-    ev = _t(spark, sf_dir, "events")
     dim = local_table(spark, _TOOL_DIM, "event_type string, tool string")
-    enriched = ev.join(F.broadcast(dim), "event_type", "left")
-    return agg.tool_invocations(enriched)
+    return agg.tool_invocations(enrich(_t(spark, sf_dir, "events"), dim, "event_type"))
 
 
 @q(

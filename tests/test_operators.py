@@ -66,12 +66,6 @@ class TestAggregates:
         out = agg.gauge_last(df, "conv_id", "v").collect()
         assert out[0]["last_value"] == 9.0
 
-    def test_top_k(self, transcripts):
-        out = agg.top_k_conversations(transcripts, k=5).collect()
-        assert len(out) == 5
-        ns = [r["n_turns"] for r in out]
-        assert ns == sorted(ns, reverse=True)
-
 
 class TestRouteWrites:
     PIPE = [
