@@ -2,17 +2,17 @@
 
 In the reference every forward-phase output handler of a matching step fires
 per message (``logshipper/pipeline.py::Step.process`` [approx]) — one
-message can land in several sinks.  Columnar equivalents, both implemented
-so they can be benchmarked against each other (SURVEY.md §4):
+message can land in several sinks.  Columnar equivalent:
 
-* **explode** (default): build ``sinks: array<string>`` per row, explode,
-  write ONCE partitioned by ``(sink, bucket)``.  Single scan of the input,
-  single shuffle; output bucketed by ``pmod(xxhash64(conv_id), B)`` so a
-  downstream per-conversation consumer gets co-located files.
-* **per-sink**: cache upstream once, then N filtered writes.  Wins only when
-  sink predicates are highly selective and the cache fits memory.  Each
-  write is ``sink_rows`` + ``write_bucketed``, the pair
-  ``CheckpointedRunner.run`` also uses.
+* **explode** — THE delivery write (the ship pass, ``CheckpointedRunner.run``
+  and, through the runner, ``foreach_batch_fanout``): build ``sinks:
+  array<string>`` per row, explode, write ONCE partitioned by ``(sink,
+  bucket)``.  Single scan of the input, single shuffle; output bucketed by
+  ``pmod(xxhash64(conv_id), B)`` so a downstream per-conversation consumer
+  gets co-located files.
+* **per-sink** — the bench A/B reference only (``bench.py``'s
+  ``fanout_write_per_sink`` row): cache upstream once, then one
+  ``write_bucketed`` write per sink (SURVEY.md §4).
 
 Skew: mega-conversations are salted on the WRITE path only —
 ``salt = pmod(xxhash64(conv_id, turn_idx), S)`` spreads one hot conv over S
@@ -82,31 +82,6 @@ def write_fanout_explode(
     )
 
 
-def sink_rows(df_with_sinks: DataFrame, sink: str, key: str = "conv_id",
-              n_buckets: int = 64) -> DataFrame:
-    """The rows delivered to ``sink``, bucketed for ``write_bucketed`` and
-    stripped of the pipeline's control columns.
-
-    Filters on sink membership ONLY — not ``__active``: a forward that fired
-    before a later drop already delivered (same contract as
-    ``Pipeline.routed``; drop only prevents FUTURE forwards, which step
-    gating handles).
-
-    Delivery MULTIPLICITY matches the explode strategy: two steps both
-    forwarding to the same sink deliver the row twice (the reference fires
-    each output handler per message) — hence the size(filter(...)) +
-    explode(sequence) copy expansion rather than a plain array_contains,
-    which would dedupe (r4 review finding)."""
-    n_onto = F.size(F.filter(F.col(SINKS), lambda s: s == F.lit(sink)))
-    sel = (
-        df_with_sinks.withColumn("__n_onto", n_onto)
-        .where(F.col("__n_onto") > 0)
-        .withColumn("__copy", F.explode(F.sequence(F.lit(1), F.col("__n_onto"))))
-        .drop("__n_onto", "__copy", ACTIVE, SINKS)
-    )
-    return with_bucket(sel, key=key, n_buckets=n_buckets)
-
-
 def write_bucketed(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """One sink's write: shuffle on ``bucket``, sorted runs per
     conversation, one directory per bucket.  The sort LEADS with bucket so
@@ -129,7 +104,7 @@ def write_fanout_per_sink(
     key: str = "conv_id",
     mode: str = "overwrite",
 ) -> None:
-    """Alternative strategy: persist once, one ``sink_rows`` write per
+    """The bench A/B reference: persist once, one ``write_bucketed`` per
     sink — same per-sink rows as the explode strategy.
 
     Fails fast: after the first failed sink no further sink starts (queued
@@ -146,7 +121,18 @@ def write_fanout_per_sink(
             if failed.is_set():
                 return
             try:
-                write_bucketed(sink_rows(cached, sink, key=key, n_buckets=n_buckets),
+                # sink membership only, not __active: a forward before a
+                # later drop already delivered.  size(filter)+explode keeps
+                # delivery multiplicity — two forwards to one sink deliver
+                # twice, as in the explode write (r4 review finding)
+                n_onto = F.size(F.filter(F.col(SINKS), lambda s: s == F.lit(sink)))
+                sel = (
+                    cached.withColumn("__n_onto", n_onto)
+                    .where(F.col("__n_onto") > 0)
+                    .withColumn("__copy", F.explode(F.sequence(F.lit(1), F.col("__n_onto"))))
+                    .drop("__n_onto", "__copy", ACTIVE, SINKS)
+                )
+                write_bucketed(with_bucket(sel, key=key, n_buckets=n_buckets),
                                os.path.join(out_dir, f"sink={sink}"), mode=mode)
             except BaseException:
                 failed.set()

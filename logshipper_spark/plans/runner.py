@@ -7,19 +7,17 @@ effectively-once for batch fan-out over immutable table snapshots:
 * **snapshot identity** — Iceberg snapshot id in production; here the
   parquet-fallback fingerprint from ``TableIO.snapshot_id`` (file listing +
   sizes).
-* **commit protocol** — each (snapshot, sink) writes to its own directory
-  with ``mode=overwrite`` and records a commit marker in ``state.json``
-  ONLY after the write action returns.  A kill mid-write leaves a partial
-  directory and no marker; resume overwrites it atomically from the same
-  immutable snapshot → zero duplicates, zero loss.
-* **lineage** — one row per (snapshot, sink) appended to a ``_lineage``
-  parquet table: rows written, wall ms, completion timestamp — the audit
-  trail the north rule requires (per-partition granularity comes free from
-  the bucket column inside each sink directory).
-
-Plan shape: the pipeline's upstream (parse+mangle+route flags) is computed
-ONCE and persisted; each sink write filters the cached frame — resumable
-per sink, single upstream pass when nothing is committed yet.
+* **one write per delta** — every pending sink goes out in ONE exploded
+  ``write_fanout_explode`` action into ``_staging-<snapshot>`` under
+  ``out_dir`` (Spark readers skip ``_`` dirs).
+* **per-sink commit** — after that action returns, each sink in turn moves
+  to ``sink=<s>[/<sink_subdir>]``, replacing what a killed attempt left,
+  and only then gets its ``state.json`` marker.  Resume rewrites staging
+  for the uncommitted sinks from the same immutable snapshot → zero
+  duplicates, zero loss.
+* **lineage** — one ``observe()`` on that write counts rows per sink and
+  per (sink, bucket); each commit appends them, with wall ms and time, to
+  the ``_lineage`` parquet table — never re-reading the written output.
 """
 
 from __future__ import annotations
@@ -32,7 +30,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from logshipper_spark.operators.route import sink_rows, write_bucketed
+from logshipper_spark.operators.route import with_bucket, write_fanout_explode
+from logshipper_spark.operators.sqltext import sql_str
 from logshipper_spark.plans.spec import Pipeline
 from logshipper_spark.sources.local import local_table
 
@@ -97,35 +96,37 @@ class CheckpointedRunner:
         if not todo:
             return report
 
-        routed = pipeline.apply(df)
-        cached = routed.persist()
+        t0 = time.time()
+        staging = os.path.join(out_dir, f"_staging-{snapshot_id}")
+        # lineage: one observed array per sink, its total then a count per
+        # bucket — SQL text, one Column per sink (not per (sink, bucket))
+        conds = ["", *(f"bucket = {b} AND " for b in range(self.n_buckets))]
+        metrics = [
+            F.expr("array(%s) AS s%d" % (", ".join(f"count_if({c}sink = {sql_str(s)})" for c in conds), i))
+            for i, s in enumerate(todo)
+        ]
+        obs = Observation()
+        routed = with_bucket(pipeline.routed(df), n_buckets=self.n_buckets)
+        write_fanout_explode(routed.where(F.col("sink").isin(todo)).observe(obs, *metrics),
+                             staging, n_buckets=self.n_buckets, salt_buckets=0)
+        # an all-empty write never reports its observation (AQE swaps the
+        # empty shuffle stage, observed metrics included, for an empty
+        # relation) — but then nothing was staged and every count is 0
+        staged = set(self._data_list(staging))
+        got = obs.get if any(n.startswith("sink=") for n in staged) else {}
+        escape = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
         lineage_rows = []
         try:
             for i, sink in enumerate(todo):
                 if fail_after is not None and i >= fail_after:
                     raise RuntimeError(f"injected failure before sink {sink}")
-                t0 = time.time()
-                sel = sink_rows(cached, sink, n_buckets=self.n_buckets)
-                # per-partition lineage piggybacked on the write action via
-                # observe(): one conditional count per bucket (≤n_buckets
-                # codegen'd aggregates), so the sink path is computed and
-                # scanned exactly ONCE — no post-write rescan (at 100 TB a
-                # re-read of the written output doubles sink I/O per sink)
-                obs = Observation(f"lineage_{snapshot_id}_{sink}")
-                metrics = [
-                    F.sum(F.when(F.col("bucket") == b, 1).otherwise(0)).cast("long").alias(f"b{b}")
-                    for b in range(self.n_buckets)
-                ]
-                sel = sel.observe(obs, F.count(F.lit(1)).alias("rows"), *metrics)
+                n, *per_bucket = got.get(f"s{i}") or [0]
                 path = os.path.join(out_dir, f"sink={sink}", sink_subdir).rstrip("/")
-                write_bucketed(sel, path)
-                got = obs.get  # blocks until the write action completes
-                per_bucket = [
-                    {"bucket": b, "rows": got[f"b{b}"]}
-                    for b in range(self.n_buckets)
-                    if got[f"b{b}"]
-                ]
-                n = int(got["rows"] or 0)
+                src = f"sink={escape(sink)}"
+                if src in staged:
+                    self._data_replace(os.path.join(staging, src), path)
+                else:
+                    self._data_delete(path)
                 wall_ms = int((time.time() - t0) * 1000)
                 now = datetime.fromtimestamp(time.time(), tz=timezone.utc)
                 self._mark_committed(
@@ -133,12 +134,12 @@ class CheckpointedRunner:
                 )
                 lineage_rows.append((snapshot_id, sink, -1, n, wall_ms, now))
                 lineage_rows.extend(
-                    (snapshot_id, sink, int(r["bucket"]), int(r["rows"]), wall_ms, now)
-                    for r in per_bucket
+                    (snapshot_id, sink, b, k, wall_ms, now)
+                    for b, k in enumerate(per_bucket) if k
                 )
                 report.written[sink] = n
+            self._data_delete(staging)
         finally:
-            cached.unpersist()
             if lineage_rows:
                 lineage = local_table(
                     self.spark,
@@ -157,11 +158,11 @@ class CheckpointedRunner:
         self._recover_lineage_swap()
         return self.spark.read.parquet(os.path.join(self.checkpoint_dir, "_lineage"))
 
-    # -- data-plane probes ---------------------------------------------------
-    # pinned-delta files and snapshot fingerprints concern files SPARK reads
-    # (data plane): probe them through Spark's own Hadoop FileSystem, never
-    # the control-plane metafs — with an injected metadata backend those are
-    # different filesystems (r4 review finding, both branches).
+    # -- data-plane files ----------------------------------------------------
+    # staged sinks, _lineage, pinned-delta files and snapshot fingerprints
+    # are files SPARK reads and writes: list, move and probe them through
+    # Spark's own Hadoop FileSystem, never the control-plane metafs — with
+    # an injected metadata backend those differ (r4 review finding).
     def _hadoop_status(self, path: str):
         jvm = self.spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(path)
@@ -178,23 +179,40 @@ class CheckpointedRunner:
         st = fs.getFileStatus(p)
         return (int(st.getLen()), int(st.getModificationTime()))
 
+    def _data_list(self, path: str) -> list[str]:
+        """Child names of a directory; [] when it does not exist."""
+        fs, p = self._hadoop_status(path)
+        return [st.getPath().getName() for st in fs.listStatus(p)] if fs.exists(p) else []
+
+    def _data_delete(self, path: str) -> None:
+        fs, p = self._hadoop_status(path)
+        fs.delete(p, True)
+
+    def _data_replace(self, src: str, dst: str) -> None:
+        """Move ``src`` to ``dst``, deleting any existing ``dst`` first (a
+        Hadoop rename onto an existing directory nests inside it)."""
+        fs, s = self._hadoop_status(src)
+        d = self._hadoop_status(dst)[1]
+        fs.delete(d, True)
+        fs.mkdirs(d.getParent())
+        if not fs.rename(s, d):
+            raise OSError(f"rename {src} -> {dst} failed")
+
     def _recover_lineage_swap(self) -> None:
         """Heal a crash between compact_lineage's two renames: ``_lineage``
         gone but ``_lineage.old`` present → restore the old table.  Without
-        this, the next compaction's rmtree of ``.old`` would silently
+        this, the next compaction's delete of ``.old`` would silently
         destroy the entire audit history (r4 review finding).  Called
         before every lineage read and at compaction start."""
         d = os.path.join(self.checkpoint_dir, "_lineage")
         old = d + ".old"
-        if not os.path.isdir(d) and os.path.isdir(old):
-            os.rename(old, d)
+        if not self._data_exists(d) and self._data_exists(old):
+            self._data_replace(old, d)
 
     def _lineage_part_files(self) -> list[str]:
         self._recover_lineage_swap()
         d = os.path.join(self.checkpoint_dir, "_lineage")
-        if not os.path.isdir(d):
-            return []
-        return [f for f in os.listdir(d) if f.endswith(".parquet") and not f.startswith(".")]
+        return [f for f in self._data_list(d) if f.endswith(".parquet") and not f.startswith(".")]
 
     def _maybe_compact_lineage(self) -> None:
         if len(self._lineage_part_files()) > self.lineage_compact_threshold:
@@ -209,8 +227,6 @@ class CheckpointedRunner:
         here and before every read) restores it, so every crash point
         leaves a recoverable table.  ``.old`` is only deleted after the
         new directory is in place.  Returns the row count compacted."""
-        import shutil
-
         self._recover_lineage_swap()
         d = os.path.join(self.checkpoint_dir, "_lineage")
         tmp = d + ".compact"
@@ -218,10 +234,9 @@ class CheckpointedRunner:
         rows = self.spark.read.parquet(d)
         n = rows.count()
         rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(d, old)
-        os.rename(tmp, d)
-        shutil.rmtree(old, ignore_errors=True)
+        self._data_replace(d, old)
+        self._data_replace(tmp, d)
+        self._data_delete(old)
         return n
 
     # -- incremental snapshots ---------------------------------------------
@@ -274,9 +289,9 @@ class CheckpointedRunner:
         mirror of an Iceberg incremental (snapshot-delta) read.
 
         Each delta gets its own snapshot id (fingerprint of the new file
-        set) and each sink writes to ``sink=<s>/ingest=<snapshot>/`` with
-        overwrite — re-running a killed delta overwrites its own partial
-        output (effectively-once), while earlier deltas are untouched.
+        set) and each sink commits to ``sink=<s>/ingest=<snapshot>/`` —
+        re-running a killed delta replaces its own partial output
+        (effectively-once), while earlier deltas are untouched.
 
         The delta's EXACT file list is persisted as ``pending_delta`` in
         state BEFORE any sink runs: a retry resumes precisely that delta —
@@ -289,7 +304,6 @@ class CheckpointedRunner:
         the delta commits.  ``read_sink_incremental`` unions the ingest dirs.
         """
         import hashlib
-        import json as _json
 
         from logshipper_spark.sources.tableio import TableIO
 
@@ -316,13 +330,12 @@ class CheckpointedRunner:
             if not new:
                 return RunReport(snapshot_id="", skipped=list(sink_names))
             stats = [(os.path.relpath(f, table_path), *self._data_stat_sig(f)) for f in new]
-            snapshot_id = "inc_" + hashlib.sha256(_json.dumps(stats).encode()).hexdigest()[:12]
+            snapshot_id = "inc_" + hashlib.sha256(json.dumps(stats).encode()).hexdigest()[:12]
             self._set_pending_delta(snapshot_id, new)
         df = self.spark.read.parquet(*new)
-        delta_out = os.path.join(out_dir)
         report = self.run(
             df, pipeline, sink_names,
-            out_dir=delta_out, snapshot_id=snapshot_id, fail_after=fail_after,
+            out_dir=out_dir, snapshot_id=snapshot_id, fail_after=fail_after,
             sink_subdir=f"ingest={snapshot_id}",
         )
         self._mark_files_processed(new)
@@ -335,7 +348,7 @@ class CheckpointedRunner:
         state.json — a glob over ``sink=<s>/`` would also pick up the
         partial directory a killed mid-write delta left behind, exposing
         uncommitted rows to readers until the retry overwrites it (r4
-        review finding)."""
+        review finding).  A zero-row commit has no directory: skipped."""
         committed = self._load_state().get("committed", {})
         prefix = os.path.join(out_dir, f"sink={sink}")
         # set-dedupe: plain run() commits (sink_subdir='') record the same
@@ -345,7 +358,7 @@ class CheckpointedRunner:
             meta["path"]
             for sinks in committed.values()
             for s, meta in sinks.items()
-            if s == sink and meta.get("path", "").startswith(prefix)
+            if s == sink and meta["rows"] and meta.get("path", "").startswith(prefix)
         })
         if not paths:
             raise FileNotFoundError(

@@ -15,11 +15,12 @@ state wiring.
 from __future__ import annotations
 
 import os
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState
 
+from logshipper_spark.plans.runner import CheckpointedRunner
+from logshipper_spark.plans.spec import Pipeline, pipeline_sinks
 from logshipper_spark.sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -180,21 +181,18 @@ def run_stream_to_memory(agg: DataFrame, name: str, output_mode: str = "append")
     return q
 
 
-def foreach_batch_fanout(
-    routed_fn: Callable[[DataFrame], DataFrame],
-    out_dir: str,
-    checkpoint_dir: str,
-):
-    """Exactly-once streaming fan-out: foreachBatch writes each micro-batch
-    to epoch-scoped directories; the checkpoint makes batch ids stable
-    across restarts, so a re-delivered epoch overwrites its own output."""
+def foreach_batch_fanout(pipeline: Pipeline, out_dir: str, checkpoint_dir: str):
+    """Exactly-once streaming fan-out: each micro-batch is one
+    ``CheckpointedRunner.run`` (snapshot ``epoch-<id>``, layout
+    ``sink=<s>/ingest=epoch-<id>/bucket=<b>``, markers, lineage).  Runner
+    state sits in the query checkpoint, whose epoch ids survive restarts:
+    a re-delivered committed epoch is a no-op."""
+    sinks = pipeline_sinks(pipeline)
 
     def write_batch(df: DataFrame, epoch_id: int) -> None:
-        out = routed_fn(df)
-        (
-            out.write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"epoch={epoch_id}"))
-        )
+        runner = CheckpointedRunner(df.sparkSession, os.path.join(checkpoint_dir, "runner"))
+        runner.run(df, pipeline, sinks, out_dir, snapshot_id=f"epoch-{epoch_id}",
+                   sink_subdir=f"ingest=epoch-{epoch_id}")
 
     def start(stream: DataFrame):
         return (

@@ -87,7 +87,7 @@ class TestRouteWrites:
     def test_explode_and_per_sink_strategies_agree(self, spark, transcripts, tmp_path, steps):
         # all three fan-out paths deliver the same per-sink row multisets:
         # the explode write, the per-sink writer and the checkpointed runner
-        # (the last two share route.sink_rows + route.write_bucketed)
+        # (the runner stages its pending sinks through the explode write)
         pipe = compile_pipeline(steps)
         d1, d2, d3 = (str(tmp_path / n) for n in ("explode", "persink", "runner"))
         sinks = sorted({s for st in steps for s in st.get("forward", [])})

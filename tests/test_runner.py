@@ -76,6 +76,74 @@ def test_new_snapshot_reprocesses(spark, transcripts, tmp_path):
     assert set(rep.written) == set(SINKS3)
 
 
+def test_one_write_per_run(spark, transcripts, tmp_path, monkeypatch):
+    """Every pending sink goes out in ONE explode write; a run with every
+    sink already committed makes none."""
+    from logshipper_spark.plans import runner
+
+    calls = []
+    real = runner.write_fanout_explode
+
+    def spy(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(runner, "write_fanout_explode", spy)
+    out = str(tmp_path / "out")
+    r = CheckpointedRunner(spark, str(tmp_path / "ckpt"))
+    df = transcripts.limit(60)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        r.run(df, PIPE, SINKS3, out, snapshot_id="snapW", fail_after=1)
+    assert len(calls) == 1
+    r.run(df, PIPE, SINKS3, out, snapshot_id="snapW")  # resumes two sinks
+    assert len(calls) == 2
+    r.run(df, PIPE, SINKS3, out, snapshot_id="snapW")  # all committed
+    assert len(calls) == 2
+    assert all(c.startswith(out) for c in calls)
+
+
+def test_zero_row_sink_commits(spark, transcripts, tmp_path):
+    """A pending sink that receives no rows commits with rows 0 and a
+    lineage total of 0 — whether it comes before or after a sink with
+    rows, and when the whole delta routes nowhere — and
+    read_sink_incremental skips it."""
+    never = compile_pipeline(
+        [{"match": "^NO SUCH LINE ", "forward": ["never"]}, {"forward": ["archive"]}]
+    )
+    n = transcripts.count()
+    for order in (["never", "archive"], ["archive", "never"]):
+        tag = order[0]
+        r = CheckpointedRunner(spark, str(tmp_path / f"ckpt_{tag}"))
+        out = str(tmp_path / f"out_{tag}")
+        rep = r.run(transcripts, never, order, out, snapshot_id="z")
+        assert rep.written == {"never": 0, "archive": n}
+        assert r.committed_sinks("z") == {"never", "archive"}
+        totals = {
+            x["sink"]: x["rows"]
+            for x in r.lineage().where(F.col("bucket") == -1).collect()
+        }
+        assert totals == {"never": 0, "archive": n}
+        assert spark.read.parquet(f"{out}/sink=archive").count() == n
+        with pytest.raises(FileNotFoundError, match="no committed ingest deltas"):
+            r.read_sink_incremental(out, "never")
+
+    # the whole first delta routes nowhere; the second delivers normally
+    table, out = str(tmp_path / "table"), str(tmp_path / "out_drop")
+    r = CheckpointedRunner(spark, str(tmp_path / "ckpt_drop"))
+    transcripts.write.parquet(f"{table}/part=1")
+    drop_all = compile_pipeline([{"drop": True}, {"forward": ["archive"]}])
+    rep = r.run_incremental(table, drop_all, ["archive"], out)
+    assert rep.written == {"archive": 0}
+    assert r.pending_delta() is None
+    lin = r.lineage().where(F.col("snapshot_id") == rep.snapshot_id).collect()
+    assert [(x["bucket"], x["rows"]) for x in lin] == [(-1, 0)]
+    half = transcripts.where(F.col("turn_idx") % 2 == 0)
+    half.write.parquet(f"{table}/part=2")
+    rep2 = r.run_incremental(table, PIPE, ["archive"], out)
+    assert rep2.written == {"archive": half.count()}
+    assert r.read_sink_incremental(out, "archive").count() == half.count()
+
+
 class TestIncremental:
     """Parquet mirror of Iceberg incremental (snapshot-delta) reads: only
     appended files are processed; kills resume without duplicates."""

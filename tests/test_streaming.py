@@ -194,7 +194,7 @@ def test_foreach_batch_fanout_exactly_once(spark, transcripts, tdir, tmp_path):
     )
     out_dir, ckpt = str(tmp_path / "fan"), str(tmp_path / "ckpt")
     stream = S.read_transcript_stream(spark, tdir, max_files_per_trigger=2)
-    start = S.foreach_batch_fanout(pipe.routed, out_dir, ckpt)
+    start = S.foreach_batch_fanout(pipe, out_dir, ckpt)
     q = start(stream)
     try:
         q.processAllAvailable()
@@ -221,7 +221,7 @@ def test_foreach_batch_restart_exactly_once(spark, transcripts, tmp_path):
     transcripts.repartition(8).write.mode("overwrite").parquet(src)
     pipe = compile_pipeline([{"forward": ["archive"]}])
     out_dir, ckpt = str(tmp_path / "fan"), str(tmp_path / "ckpt")
-    start = S.foreach_batch_fanout(pipe.routed, out_dir, ckpt)
+    start = S.foreach_batch_fanout(pipe, out_dir, ckpt)
 
     # first lifetime: consume some batches, then stop
     stream1 = S.read_transcript_stream(spark, src, max_files_per_trigger=2)
